@@ -1,0 +1,1 @@
+"""Benchmark for this repository: see README.md in this directory."""
