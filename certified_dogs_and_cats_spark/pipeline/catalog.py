@@ -47,6 +47,7 @@ import time
 import urllib.parse
 from dataclasses import dataclass, field
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -70,6 +71,30 @@ def _layout_sig(rel: str) -> tuple[str, ...]:
 
 class ConstraintViolation(ValueError):
     """A write would insert rows violating a CHECK constraint."""
+
+
+#: Message of the ``raise_error`` that :func:`_enforced` plants in a write.
+_VIOLATION = "__catalog_constraint_violation__"
+
+
+def _enforced(df: DataFrame, checks: dict[str, str]) -> DataFrame:
+    """``df`` with its first column replaced by one that raises
+    :data:`_VIOLATION` on any row failing a check (a NULL result fails,
+    as in :meth:`Catalog._check_constraints`). The check lives in a
+    written column, not a filter, so the optimizer cannot push it below a
+    join and test rows the write would never emit."""
+    if not checks:
+        return df
+    from pyspark.sql import functions as F
+
+    bad = " OR ".join(f"NOT coalesce(({e}), false)" for e in checks.values())
+    first = df.columns[0]
+    return df.withColumn(
+        first,
+        F.when(F.expr(bad), F.raise_error(F.lit(_VIOLATION))).otherwise(
+            df[first]
+        ),
+    )
 
 
 class ConcurrentWriteConflict(RuntimeError):
@@ -252,9 +277,6 @@ class Catalog:
             .schema(spec.physical_schema())
             .load(spec.path)
         )
-        dvs = []
-        if dvs:
-            df = self._apply_dv(spec, df, dvs)
         # Partition columns come back typed by directory inference; project
         # to the declared column order and types (physical file names map
         # back to logical declared names — Delta column mapping).
@@ -290,34 +312,6 @@ class Catalog:
 
     def _dv_dir(self, name: str) -> str:
         return os.path.join(self._meta_dir(name), "dv")
-
-    def _apply_dv(self, spec: TableSpec, df: DataFrame, dvs: list[str]) -> DataFrame:
-        """Filter tombstoned rows out of a scan: anti-join on the
-        (relative file, row_index) identity the DV sidecars store. The
-        tombstone set is small relative to the table (or it should have
-        been a rewrite), so this broadcasts."""
-        from pyspark.sql import functions as F
-
-        dv = self.spark.read.parquet(
-            *[os.path.join(self._dv_dir(spec.name), f) for f in dvs]
-        )
-        root = os.path.abspath(spec.path)
-        keyed = df.withColumn(
-            "__dv_file", F.expr(f"substring_index(_metadata.file_path, '{_sql_str(root)}/', -1)")
-        ).withColumn("__dv_idx", F.col("_metadata.row_index"))
-        return (
-            keyed.join(
-                F.broadcast(
-                    dv.select(
-                        F.col("file").alias("__dv_file"),
-                        F.col("row_index").alias("__dv_idx"),
-                    )
-                ),
-                ["__dv_file", "__dv_idx"],
-                "left_anti",
-            )
-            .drop("__dv_file", "__dv_idx")
-        )
 
     def delete_where(
         self, name: str, predicate: str, rewrite: bool = False
@@ -1151,22 +1145,29 @@ class Catalog:
     def drop_constraint(self, name: str, cname: str) -> None:
         self.tables[name].constraints.pop(cname, None)
 
+    def _with_not_null(
+        self, name: str, df: DataFrame, constraints: dict[str, str]
+    ) -> dict[str, str]:
+        """``constraints`` plus the declared NOT NULL columns as implicit
+        constraints (Delta enforces nullability at write time; Spark's
+        schema nullability alone is advisory and would let NULLs through
+        silently)."""
+        spec = self.tables.get(name)
+        if spec is None:
+            return constraints
+        implicit = {
+            f"__not_null_{f.name}": f"{f.name} IS NOT NULL"
+            for f in spec.schema.fields
+            if not f.nullable and f.name in df.columns
+        }
+        return {**constraints, **implicit}
+
     def _check_constraints(
         self, name: str, df: DataFrame, constraints: dict[str, str]
     ) -> None:
-        # Declared NOT NULL columns are implicit constraints (Delta
-        # enforces nullability at write time; Spark's schema nullability
-        # alone is advisory and would let NULLs through silently). Same
-        # single map-side aggregate as the explicit CHECKs.
-        spec = self.tables.get(name)
-        if spec is not None:
-            implicit = {
-                f"__not_null_{f.name}": f"{f.name} IS NOT NULL"
-                for f in spec.schema.fields
-                if not f.nullable and f.name in df.columns
-            }
-            if implicit:
-                constraints = {**constraints, **implicit}
+        """Count each constraint's violations in one map-side aggregate
+        and raise :class:`ConstraintViolation` naming them."""
+        constraints = self._with_not_null(name, df, constraints)
         if not constraints:
             return
         from pyspark.sql import functions as F
@@ -1242,8 +1243,17 @@ class Catalog:
         df = self._apply_defaults(spec, df)
         df = self._apply_identity(spec, df)
         df = self._apply_generated(spec, df)
-        self._check_constraints(name, df, spec.constraints)
-        added = self._stage_files_in(spec, df)
+        # Constraints are enforced by the write itself: a violating row
+        # fails its task, and only then does the counting aggregate run,
+        # so a clean append costs no extra job.
+        checks = self._with_not_null(name, df, spec.constraints)
+        try:
+            added = self._stage_files_in(spec, _enforced(df, checks))
+        except PySparkException as e:
+            if _VIOLATION not in str(e):
+                raise
+            self._check_constraints(name, df, spec.constraints)
+            raise
         self._commit(name, "append", txn=txn, added=added)
         self._maintain_blooms(name, added)
         if (
@@ -1413,21 +1423,27 @@ class Catalog:
         """Write ``df`` to a writer-private staging directory and move the
         data files into the table; returns exactly the relative files this
         writer added (Spark's UUID-bearing part filenames make cross-writer
-        collisions impossible)."""
+        collisions impossible). A partitioned write is rebalanced on its
+        partition columns first (Spark's optimized write: AQE merges small
+        shuffle partitions and splits skewed ones), so a small append lands
+        as one file per partition value instead of one per input split."""
         staging = f"{spec.path}__append_{os.getpid()}_{time.time_ns()}"
-        writer = self._to_physical(spec, df).write.format(
-            spec.fmt
-        ).mode("overwrite")
+        out = self._to_physical(spec, df)
+        if spec.partition_by:
+            out = out.hint("rebalance", *spec.partition_by)
+        writer = out.write.format(spec.fmt).mode("overwrite")
         if spec.partition_by:
             writer = writer.partitionBy(*spec.partition_by)
-        writer.save(staging)
-        added = []
-        for rel in self._data_files(staging):
-            dst = os.path.join(spec.path, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(os.path.join(staging, rel), dst)
-            added.append(rel)
-        shutil.rmtree(staging, ignore_errors=True)
+        try:
+            writer.save(staging)
+            added = []
+            for rel in self._data_files(staging):
+                dst = os.path.join(spec.path, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.replace(os.path.join(staging, rel), dst)
+                added.append(rel)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
         return added
 
     def history(self, name: str) -> list[dict]:

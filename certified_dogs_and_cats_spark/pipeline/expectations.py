@@ -24,23 +24,50 @@ def run_guards(
     no_nulls: Sequence[str] = (),
     unique: Sequence[str] = (),
     domain: dict[str, Sequence[str]] | None = None,
-) -> None:
+    counts: dict[str, DataFrame] | None = None,
+) -> dict[str, int]:
     """Single-pass guard evaluation.
 
     - no_nulls: columns that must not contain NULL (bronze.py:98-100)
     - unique:   columns whose values must be unique  (bronze.py:102-103)
     - domain:   column -> allowed values whitelist   (bronze.py:105-107)
+    - counts:   name -> frame whose row count the caller also needs,
+      returned by name
+
+    The counted frames are stacked under ``df`` by a tagged union and every
+    figure is one conditional aggregate over the stack, so a stage's
+    guards and counts cost one action and one aggregation (two exchanges
+    for the distinct count), not one aggregation per frame.
     """
     domain = domain or {}
-    aggs = [F.count(F.lit(1)).alias("__n__")]
+    counts = counts or {}
+    tag = F.col("__part__")
+    guarded = sorted({*no_nulls, *unique, *domain})
+    stack = df.select(*guarded, F.lit(0).alias("__part__"))
+    for i, frame in enumerate(counts.values(), 1):
+        stack = stack.unionByName(
+            frame.select(F.lit(i).alias("__part__")), allowMissingColumns=True
+        )
+
+    def rows_where(cond):
+        return F.sum(F.when((tag == 0) & cond, 1).otherwise(0))
+
+    aggs = [rows_where(F.lit(True)).alias("__n__")]
     for c in no_nulls:
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__null__{c}"))
+        aggs.append(rows_where(F.col(c).isNull()).alias(f"__null__{c}"))
     for c in unique:
-        aggs.append(F.countDistinct(c).alias(f"__dist__{c}"))
+        aggs.append(
+            F.countDistinct(F.when(tag == 0, F.col(c))).alias(f"__dist__{c}")
+        )
     for c, allowed in domain.items():
         bad = (~F.col(c).isin(*allowed)) | F.col(c).isNull()
-        aggs.append(F.sum(bad.cast("long")).alias(f"__bad__{c}"))
-    row = df.agg(*aggs).collect()[0].asDict()
+        aggs.append(rows_where(bad).alias(f"__bad__{c}"))
+    for i, key in enumerate(counts, 1):
+        aggs.append(
+            F.sum(F.when(tag == i, 1).otherwise(0)).alias(f"__count__{key}")
+        )
+    # A SUM over no rows is NULL; here that means 0.
+    row = {k: v or 0 for k, v in stack.agg(*aggs).collect()[0].asDict().items()}
     n = row["__n__"]
     problems = []
     for c in no_nulls:
@@ -62,6 +89,7 @@ def run_guards(
             )
     if problems:
         raise GuardError("; ".join(problems))
+    return {key: row[f"__count__{key}"] for key in counts}
 
 
 def assert_flag_consistency(

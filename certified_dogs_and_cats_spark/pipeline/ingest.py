@@ -9,9 +9,9 @@ Semantics parity with notebooks/bronze.py (SURVEY.md §3.1 step 2):
 - append partitioned by (Year, ANIMAL_TYPE)
 
 Differences by design (documented in SURVEY.md §4): guards run in ONE
-aggregate pass over a cached batch instead of re-scanning per guard; the
-fixed `clock` parameter replaces wall-clock timestamps so runs are
-reproducible and oracle-comparable.
+aggregate pass over a cached batch instead of re-scanning per guard, in the
+same action that counts the new rows; the fixed `clock` parameter replaces
+wall-clock timestamps so runs are reproducible and oracle-comparable.
 """
 
 from __future__ import annotations
@@ -111,12 +111,6 @@ def bronze_stage(
     )
     batch = standardize(raw, ingestion_date, clock).cache()
     try:
-        run_guards(
-            batch,
-            no_nulls=["_id"],
-            unique=["_id"],
-            domain={"ANIMAL_TYPE": ANIMAL_TYPES},
-        )
         from ..operators.joins import idempotent_new_rows
 
         existing = catalog.table("core.licensed_pets_bronze")
@@ -129,7 +123,15 @@ def bronze_stage(
             catalog.append("core.load_control", ctrl_row)
 
         try:
-            n = new_rows.count()
+            # One action: the guards over the batch, and the count of its
+            # new rows (which also fills new_rows' cache for the append).
+            n = run_guards(
+                batch,
+                no_nulls=["_id"],
+                unique=["_id"],
+                domain={"ANIMAL_TYPE": ANIMAL_TYPES},
+                counts={"new": new_rows},
+            )["new"]
             if n == 0:
                 # DELIBERATELY not marked in load_control: a drop whose
                 # rows all duplicate earlier dates contributed nothing,

@@ -27,7 +27,7 @@ from ..functions.scalar import normalize_key, null_if_invalid, pattern_valid
 from ..operators.joins import dim_lookup
 from ..operators.windows import latest_per_key
 from .catalog import Catalog
-from .expectations import is_empty, run_guards
+from .expectations import run_guards
 from .ingest import StageResult
 from .refdata import ensure_mapping
 from .schemas import ANIMAL_TYPES, FSA_PATTERN, SILVER_SCHEMA
@@ -55,8 +55,6 @@ def silver_stage(
     bronze = catalog.table("core.licensed_pets_bronze").filter(
         F.col("ingestion_date") == F.lit(ingestion_date)
     )
-    if is_empty(bronze):
-        return StageResult("skipped_no_files")
 
     up = lambda c: F.upper(F.trim(F.col(c)))  # noqa: E731
     std = bronze.withColumns(
@@ -110,13 +108,22 @@ def silver_stage(
 
     silver_batch = silver_batch.cache()
     try:
-        run_guards(silver_batch, no_nulls=["_id"], unique=["_id"])
         from ..operators.joins import idempotent_new_rows
 
         existing = catalog.table("core.licensed_pets_silver")
         new_rows = idempotent_new_rows(silver_batch, existing, ["_id"]).cache()
         try:
-            n = new_rows.count()
+            # One action: the guards, the size of the date's Bronze slice
+            # and the count of new rows.
+            got = run_guards(
+                silver_batch,
+                no_nulls=["_id"],
+                unique=["_id"],
+                counts={"bronze": bronze, "new": new_rows},
+            )
+            if got["bronze"] == 0:
+                return StageResult("skipped_no_files")
+            n = got["new"]
             if n == 0:
                 return StageResult("skipped_no_new_rows")
             catalog.append("core.licensed_pets_silver", new_rows)

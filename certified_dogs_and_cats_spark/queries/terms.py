@@ -23,11 +23,13 @@ LIFT_K = 20
 
 
 def _slit(s: str) -> str:
-    """SQL single-quoted-string body for ``s``: double any embedded
-    quote. The module's own term constants are plain lowercase words,
-    but ``_bm25_scored`` accepts caller-supplied terms (ADVICE r12 #1 —
-    a quote in a term must not break parsing or inject SQL)."""
-    return s.replace("'", "''")
+    """SQL single-quoted-string body for ``s``: escape backslashes (Spark
+    SQL literals treat ``\\`` as an escape character, so a term ending in
+    one would swallow the closing quote), then double any embedded quote.
+    The module's own term constants are plain lowercase words, but
+    ``_bm25_scored`` accepts caller-supplied terms, and a quote or
+    backslash in a term must not break parsing or inject SQL."""
+    return s.replace("\\", "\\\\").replace("'", "''")
 
 
 def _dlit(x: float) -> str:

@@ -10,6 +10,11 @@ also be sane on a real multi-executor cluster:
 - Session timezone pinned to UTC so timestamp-derived columns (year/day
   truncation) are deterministic and oracle-comparable.
 - Arrow enabled for any pandas interchange (extensions use Pandas UDFs).
+- Driver-side file listing up to ``LISTING_THRESHOLD`` paths: catalog reads
+  pass the committed file list from the table's log, so there is nothing
+  to discover, and Spark's default (a one-task-per-file listing job once a
+  read names more than 32 paths) would add a job to every read of a table
+  whose history has grown past 32 files.
 """
 
 from __future__ import annotations
@@ -17,6 +22,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+#: ``spark.sql.sources.parallelPartitionDiscovery.threshold``: paths a read
+#: may name before Spark lists them with a distributed job.
+LISTING_THRESHOLD = 1 << 20
 
 
 def default_parallelism() -> int:
@@ -38,6 +48,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(LISTING_THRESHOLD),
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

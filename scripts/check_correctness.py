@@ -144,13 +144,13 @@ def main() -> int:
             current_fingerprints,
         )
 
-        results["_fingerprints"] = current_fingerprints()
+        artifact = {**results, "_fingerprints": current_fingerprints()}
         with open(
             os.path.join(repo_root, "CORRECTNESS_local.json"), "w"
         ) as f:
-            json.dump(results, f, indent=2)
+            json.dump(artifact, f, indent=2)
         print(f"full-registry artifact: CORRECTNESS_local.json "
-              f"({len(results)} entries)")
+              f"({len(results)} queries)")
     checked = len(results) if only else len(QUERIES)
     scope = "checked queries" if only else "queries"
     print(f"\n{checked - len(failures)}/{checked} {scope} pass")

@@ -154,3 +154,34 @@ def test_bronze_health_shape(spark, silver):
     assert h["n_years"] == 1
     assert h["invalid_fsa_cnt"] == 1
     assert h["max_ingestion_ts"] == TS
+
+
+def test_daily_totals_per_ingestion_day(silver):
+    from certified_dogs_and_cats_spark.pipeline.analytics import daily_totals
+
+    later = datetime(2026, 1, 2, 9, 0, 0)
+    two_days = silver.withColumn(
+        "ingestion_ts",
+        F.when(F.col("_id") >= 5, F.lit(later)).otherwise(F.col("ingestion_ts")),
+    )
+    got = {
+        r["day"]: (r["cnt"], r["n_types"])
+        for r in daily_totals(gold_src(two_days)).collect()
+    }
+    # ids 1-4 (DOG and CAT) on the 1st; 5-6 (DOG) on the 2nd; 7 has no Year
+    assert got == {D: (4, 2), later.date(): (2, 1)}
+
+
+def test_silver_health_metrics(spark, silver):
+    from certified_dogs_and_cats_spark.pipeline.analytics import silver_health
+
+    h = silver_health(silver).collect()[0].asDict()
+    assert h == {
+        "row_cnt": 7, "distinct_ids": 7, "mapped_cnt": 6, "unmapped_cnt": 1,
+        "pct_mapped": 85.71, "max_processed_ts": TS,
+    }
+    empty = spark.createDataFrame([], SILVER_SCHEMA)
+    assert silver_health(empty).collect()[0].asDict() == {
+        "row_cnt": 0, "distinct_ids": 0, "mapped_cnt": None,
+        "unmapped_cnt": None, "pct_mapped": None, "max_processed_ts": None,
+    }

@@ -200,3 +200,27 @@ def test_series_ln_bit_identical_cross_engine(spark):
         assert struct.pack("<d", got_s[p]) == struct.pack("<d", got_d[p])
         true = math.log(p[0] / p[1])
         assert abs(got_s[p] - true) <= 5e-12 * max(1.0, abs(true))
+
+
+def test_slit_round_trips_quotes_and_backslashes(spark):
+    """A term with both a backslash and a quote, including one that ends
+    in a backslash, parses as exactly itself inside a SQL literal."""
+    from certified_dogs_and_cats_spark.queries.terms import _slit
+
+    for term in ("don't\\", "a\\'b", "\\\\x''", "plain"):
+        got = spark.sql(f"SELECT '{_slit(term)}' AS v").collect()[0]["v"]
+        assert got == term
+
+
+def test_bm25_term_with_backslash_and_quote(spark, monkeypatch):
+    """A caller-supplied term containing ``\\`` and ``'`` scores exactly the
+    documents holding that token, as any plain term would."""
+    from certified_dogs_and_cats_spark.queries import terms as terms_mod
+
+    term = "it's\\n"
+    df = _docs(spark, [(1, f"say {term} twice {term}", "en", "s", 20),
+                       (2, "say its n once", "en", "s", 14),
+                       (3, f"just {term}", "en", "s", 10)])
+    monkeypatch.setattr(terms_mod, "t", lambda _s, _d, _n: df)
+    out = terms_mod._bm25_scored(spark, "unused", k=10, terms=(term,))
+    assert sorted(r.doc_id for r in out.collect()) == [1, 3]

@@ -94,3 +94,24 @@ def test_silver_incremental_second_day(catalog, raw_root):
     silver = catalog.table("core.licensed_pets_silver")
     assert silver.count() == 8
     assert silver.select("_id").distinct().count() == 8
+
+
+def test_silver_date_without_bronze_rows_skips(catalog, raw_root):
+    """A date with no Bronze slice is ``skipped_no_files`` even once Bronze
+    holds other dates, and Silver gains nothing."""
+    run_day1(catalog, raw_root)
+    res = silver_stage(catalog, D2, CLOCK2)
+    assert res.status == "skipped_no_files"
+    assert catalog.table("core.licensed_pets_silver").count() == 6
+
+
+def test_silver_date_with_no_valid_rows_skips(catalog, raw_root):
+    """Bronze rows that all fail Silver's required-field filter (NULL
+    breed) leave an empty Silver batch: the guards pass on it and the date
+    is ``skipped_no_new_rows``, not an error."""
+    run_day1(catalog, raw_root)
+    write_drop(raw_root, D2, [(9, 2025, "M9J", "DOG", ""), (10, 2025, "M1A", "CAT", "")])
+    assert bronze_stage(catalog, raw_root, D2, CLOCK2).status == "loaded"
+    res = silver_stage(catalog, D2, CLOCK2)
+    assert res.status == "skipped_no_new_rows"
+    assert catalog.table("core.licensed_pets_silver").count() == 6
