@@ -40,7 +40,9 @@ def gold_src(silver: DataFrame) -> DataFrame:
 
 def _pct(num: str, den: str, digits: int = 2) -> str:
     """SQL text of :func:`functions.scalar.pct`: 100*num/den rounded, NULL
-    when den = 0 (Spark 4 runs ANSI mode, where an unguarded /0 fails)."""
+    when den = 0 (Spark 4 runs ANSI mode, where an unguarded /0 fails).
+    The Column form stays as the ``functions`` package's exported API;
+    ``test_pct_sql_text_matches_column_form`` keeps the two in step."""
     return (
         f"ROUND(100.0D * CASE WHEN {den} <> 0 THEN "
         f"CAST({num} AS DOUBLE) / CAST({den} AS DOUBLE) END, {digits})"

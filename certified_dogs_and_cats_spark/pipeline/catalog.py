@@ -47,7 +47,6 @@ import time
 import urllib.parse
 from dataclasses import dataclass, field
 
-from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -77,18 +76,21 @@ class ConstraintViolation(ValueError):
 _VIOLATION = "__catalog_constraint_violation__"
 
 
-def _enforced(df: DataFrame, checks: dict[str, str]) -> DataFrame:
-    """``df`` with its first column replaced by one that raises
-    :data:`_VIOLATION` on any row failing a check (a NULL result fails,
-    as in :meth:`Catalog._check_constraints`). The check lives in a
-    written column, not a filter, so the optimizer cannot push it below a
-    join and test rows the write would never emit."""
+def _enforced(
+    spec: "TableSpec", df: DataFrame, checks: dict[str, str]
+) -> DataFrame:
+    """``df`` with the table's first declared column replaced by one that
+    raises :data:`_VIOLATION` on any row failing a check (a NULL result
+    fails, as in :meth:`Catalog._check_constraints`). The check lives in a
+    column every write keeps (undeclared columns of a wider frame are
+    projected away), not in a filter, so the optimizer can neither drop it
+    nor push it below a join to test rows the write would never emit."""
     if not checks:
         return df
     from pyspark.sql import functions as F
 
     bad = " OR ".join(f"NOT coalesce(({e}), false)" for e in checks.values())
-    first = df.columns[0]
+    first = spec.schema.fields[0].name
     return df.withColumn(
         first,
         F.when(F.expr(bad), F.raise_error(F.lit(_VIOLATION))).otherwise(
@@ -489,7 +491,6 @@ class Catalog:
             updated = updated.drop(*regen)
         updated = self._apply_generated(spec, updated)
         updated = updated.select(*spec.schema.fieldNames())
-        self._check_constraints(name, updated, spec.constraints)
         dv_name = f"dv-{os.getpid()}-{time.time_ns()}"
         out = os.path.join(self._dv_dir(name), dv_name)
         hits.select(
@@ -499,7 +500,13 @@ class Catalog:
         if n == 0:
             shutil.rmtree(out, ignore_errors=True)
             return 0
-        added = self._stage_files_in(spec, updated)
+        try:
+            added = self._stage_files_in(spec, updated)
+        except Exception:
+            # A constraint violation (or any failed write): the sidecar
+            # was never committed.
+            shutil.rmtree(out, ignore_errors=True)
+            raise
         try:
             self._commit(
                 name,
@@ -554,7 +561,6 @@ class Catalog:
                 f"{name}: replace_where({predicate!r}) was given rows that"
                 " do not satisfy the predicate"
             )
-        self._check_constraints(name, df, spec.constraints)
         if not self.exists(name):
             added = self._stage_files_in(spec, df)
             self._commit(name, "replace_where", added=added)
@@ -603,7 +609,11 @@ class Catalog:
         dvs = prior + [dv_name] if n else prior
         if n == 0:
             shutil.rmtree(out, ignore_errors=True)
-        added = self._stage_files_in(spec, df)
+        try:
+            added = self._stage_files_in(spec, df)
+        except Exception:
+            shutil.rmtree(out, ignore_errors=True)
+            raise
         try:
             self._commit(
                 name,
@@ -1243,17 +1253,7 @@ class Catalog:
         df = self._apply_defaults(spec, df)
         df = self._apply_identity(spec, df)
         df = self._apply_generated(spec, df)
-        # Constraints are enforced by the write itself: a violating row
-        # fails its task, and only then does the counting aggregate run,
-        # so a clean append costs no extra job.
-        checks = self._with_not_null(name, df, spec.constraints)
-        try:
-            added = self._stage_files_in(spec, _enforced(df, checks))
-        except PySparkException as e:
-            if _VIOLATION not in str(e):
-                raise
-            self._check_constraints(name, df, spec.constraints)
-            raise
+        added = self._stage_files_in(spec, df)
         self._commit(name, "append", txn=txn, added=added)
         self._maintain_blooms(name, added)
         if (
@@ -1419,23 +1419,52 @@ class Catalog:
                     )
         return df
 
-    def _stage_files_in(self, spec: TableSpec, df: DataFrame) -> list[str]:
-        """Write ``df`` to a writer-private staging directory and move the
-        data files into the table; returns exactly the relative files this
-        writer added (Spark's UUID-bearing part filenames make cross-writer
-        collisions impossible). A partitioned write is rebalanced on its
-        partition columns first (Spark's optimized write: AQE merges small
-        shuffle partitions and splits skewed ones), so a small append lands
-        as one file per partition value instead of one per input split."""
-        staging = f"{spec.path}__append_{os.getpid()}_{time.time_ns()}"
-        out = self._to_physical(spec, df)
-        if spec.partition_by:
+    def _write_checked(
+        self,
+        spec: TableSpec,
+        df: DataFrame,
+        path: str,
+        rebalance: bool = False,
+    ) -> None:
+        """Write ``df``'s declared columns to ``path`` in the table's
+        physical layout, enforcing its NOT NULL and CHECK constraints
+        inside the write: a violating row fails its task, and only then
+        does the counting :meth:`_check_constraints` run, so a clean write
+        costs no extra job and a violation raises the same
+        :class:`ConstraintViolation` with the same counts. ``append``,
+        ``update_where``, ``replace_where`` and ``overwrite`` write through
+        here. ``rebalance`` hints a partitioned write to be rebalanced on
+        its partition columns (Spark's optimized write: AQE merges small
+        shuffle partitions and splits skewed ones); ``overwrite`` leaves it
+        off, since compaction's file count and sort order must survive."""
+        checks = self._with_not_null(spec.name, df, spec.constraints)
+        out = self._to_physical(spec, _enforced(spec, df, checks))
+        if rebalance and spec.partition_by:
             out = out.hint("rebalance", *spec.partition_by)
         writer = out.write.format(spec.fmt).mode("overwrite")
         if spec.partition_by:
             writer = writer.partitionBy(*spec.partition_by)
         try:
-            writer.save(staging)
+            writer.save(path)
+        except Exception as e:
+            # Matched on the text, not the exception type: the marker
+            # survives however the JVM error reaches Python.
+            if _VIOLATION not in str(e):
+                raise
+            self._check_constraints(spec.name, df, spec.constraints)
+            raise
+
+    def _stage_files_in(self, spec: TableSpec, df: DataFrame) -> list[str]:
+        """Write ``df`` (constraint-checked, see :meth:`_write_checked`) to
+        a writer-private staging directory and move the data files into the
+        table; returns exactly the relative files this writer added
+        (Spark's UUID-bearing part filenames make cross-writer collisions
+        impossible). The write is rebalanced on the partition columns, so
+        a small append lands as one file per partition value instead of
+        one per input split."""
+        staging = f"{spec.path}__append_{os.getpid()}_{time.time_ns()}"
+        try:
+            self._write_checked(spec, df, staging, rebalance=True)
             added = []
             for rel in self._data_files(staging):
                 dst = os.path.join(spec.path, rel)
@@ -2296,14 +2325,12 @@ class Catalog:
         df = self._apply_defaults(spec, df)
         df = self._apply_identity(spec, df, strict=False)
         df = self._apply_generated(spec, df)
-        self._check_constraints(name, df, spec.constraints)
         tmp = spec.path + f"__staging-{os.getpid()}-{time.time_ns()}"
-        writer = self._to_physical(spec, df).write.format(
-            spec.fmt
-        ).mode("overwrite")
-        if spec.partition_by:
-            writer = writer.partitionBy(*spec.partition_by)
-        writer.save(tmp)
+        try:
+            self._write_checked(spec, df, tmp)
+        except Exception:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         if os.path.isdir(spec.path):
             trash = os.path.join(self._trash_dir(name), str(time.time_ns()))
             os.makedirs(os.path.dirname(trash), exist_ok=True)

@@ -185,3 +185,24 @@ def test_silver_health_metrics(spark, silver):
         "row_cnt": 0, "distinct_ids": 0, "mapped_cnt": None,
         "unmapped_cnt": None, "pct_mapped": None, "max_processed_ts": None,
     }
+
+
+def test_pct_sql_text_matches_column_form(spark):
+    """The views' SQL-text percentage and the exported Column ``pct`` are
+    one rule: same rounding, same NULL on a zero or NULL denominator."""
+    from certified_dogs_and_cats_spark.functions import pct
+    from certified_dogs_and_cats_spark.pipeline.analytics import _pct
+
+    df = spark.createDataFrame(
+        [(1, 3), (2, 3), (5, 0), (None, 4), (7, None), (-1, 6), (0, 9)],
+        "n long, d long",
+    )
+    for digits in (2, 4):
+        got = df.select(
+            F.expr(_pct("n", "d", digits)).alias("sql"),
+            pct(F.col("n"), F.col("d"), digits).alias("col"),
+        ).collect()
+        assert all(r["sql"] == r["col"] for r in got)
+        assert [r["sql"] for r in got][:3] == (
+            [33.33, 66.67, None] if digits == 2 else [33.3333, 66.6667, None]
+        )

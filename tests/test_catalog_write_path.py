@@ -117,3 +117,75 @@ def test_clean_append_to_checked_table_is_one_job(spark, catalog):
     _, jobs = _jobs_in(spark, "clean-append", lambda: catalog.append("t.ok", rows))
     assert jobs == 1
     assert sorted(r.k for r in catalog.table("t.ok").collect()) == [1, 2]
+
+
+def test_wider_frame_with_undeclared_first_column_is_checked(spark, catalog):
+    """The check rides in a declared column, so it survives the projection
+    that drops a wider frame's undeclared columns."""
+    catalog.register("t.wider", SCHEMA)
+    catalog.append("t.wider", spark.createDataFrame([(1, 5, "a")], SCHEMA))
+    catalog.add_constraint("t.wider", "positive", "v > 0")
+    version = catalog.current_version("t.wider")
+    bad = spark.createDataFrame(
+        [("x", 2, -1, "a"), ("y", None, 3, "a"), ("z", 4, 4, "b")],
+        "extra string, k long, v long, p string",
+    )
+    with pytest.raises(ConstraintViolation) as err:
+        catalog.append("t.wider", bad)
+    assert str(err.value) == (
+        "t.wider: CHECK constraint violation(s): "
+        "positive ('v > 0'): 1 row(s), "
+        "__not_null_k ('k IS NOT NULL'): 1 row(s)"
+    )
+    assert catalog.current_version("t.wider") == version
+    assert [r.k for r in catalog.table("t.wider").collect()] == [1]
+
+
+def _snapshot(path: str) -> list[str]:
+    return sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, fs in os.walk(path)
+        for f in fs
+    )
+
+
+@pytest.mark.parametrize("writer", ["update", "replace_where", "overwrite"])
+def test_every_writer_checks_in_the_write_and_leaves_nothing(
+    spark, catalog, writer
+):
+    """update_where, replace_where and overwrite share append's in-write
+    check: the same counted ConstraintViolation, no new version, and no
+    data file, deletion-vector sidecar or staging directory left."""
+    catalog.register("t.rw", SCHEMA, partition_by=("p",))
+    catalog.append(
+        "t.rw", spark.createDataFrame([(1, 5, "a"), (2, 6, "b")], SCHEMA)
+    )
+    catalog.add_constraint("t.rw", "positive", "v > 0")
+    spec = catalog.tables["t.rw"]
+    parent = os.path.dirname(spec.path)
+    version = catalog.current_version("t.rw")
+    before = _snapshot(catalog.root)
+    dirs = sorted(os.listdir(parent))
+
+    with pytest.raises(ConstraintViolation) as err:
+        if writer == "update":
+            catalog.update_where("t.rw", {"v": "v - 6"}, "k >= 1")
+        elif writer == "replace_where":
+            catalog.replace_where(
+                "t.rw", "p = 'a'",
+                spark.createDataFrame([(1, -5, "a"), (3, 0, "a")], SCHEMA),
+            )
+        else:
+            catalog.overwrite(
+                "t.rw",
+                spark.createDataFrame([(1, -5, "a"), (3, 0, "b")], SCHEMA),
+            )
+    assert str(err.value) == (
+        "t.rw: CHECK constraint violation(s): positive ('v > 0'): 2 row(s)"
+    )
+    assert catalog.current_version("t.rw") == version
+    assert _snapshot(catalog.root) == before
+    assert sorted(os.listdir(parent)) == dirs
+    assert sorted((r.k, r.v) for r in catalog.table("t.rw").collect()) == [
+        (1, 5), (2, 6),
+    ]
