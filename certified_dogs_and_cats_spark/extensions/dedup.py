@@ -260,43 +260,6 @@ def containment_pairs(
     ).filter(F.col("containment") >= threshold)
 
 
-def minhash_signatures(
-    shingles: DataFrame, id_col: str, num_hashes: int = 32
-) -> DataFrame:
-    """MinHash signature: per doc, min over shingles of a 60-bit integer
-    hash (top 15 hex chars of md5(f"{i}#{shingle}"), base-16) for each of
-    `num_hashes` seeded hash functions. One aggregate; signature size is
-    constant per doc regardless of doc length, and a row of longs (not
-    digest strings) keeps the signature frame ~4x smaller.
-
-    Defaults (32 hashes, banded 8 bands x 4 rows by
-    :func:`lsh_candidate_pairs`) give a production S-curve: candidate
-    probability 1-(1-s^4)^8 is ~0.99 at Jaccard 0.8, ~0.89 at 0.7, and only
-    ~0.06 at 0.3 — near-complete recall for true near-dups with far fewer
-    low-similarity false candidates to verify than the 4x2 banding (which
-    admits ~31% of 0.3-similar pairs). The oracle-checked query pins 8/2
-    explicitly for cheap exact replay in DuckDB."""
-    aggs = [
-        F.min(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(f"{i}#"), F.col("shingle").cast("string")
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-        ).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return shingles.groupBy(id_col).agg(*aggs)
-
-
 def lsh_candidate_pairs(
     signatures: DataFrame, id_col: str, num_hashes: int = 32, band_size: int = 4
 ) -> DataFrame:
@@ -338,74 +301,58 @@ def lsh_candidate_pairs(
     )
 
 
-def shingle_hash_array(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
+def minhash_shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = 32
 ) -> DataFrame:
-    """(id, sh_arr): per-doc DISTINCT word n-gram shingles as 60-bit
-    integers, computed entirely MAP-SIDE as one array column — the
-    zero-shuffle sibling of ``word_shingles(as_hash=True)`` for consumers
-    that never need the corpus-wide shingle stream (MinHash signatures,
-    candidate verification via ``array_intersect``). Values are identical
-    to the exploded form (same md5 -> top-15-hex -> base-16 hash), so the
-    two representations interoperate and oracles replay either.
+    """(id, sh_arr, mh0..mh{num_hashes-1}) per document: ``sh_arr`` is the
+    set of DISTINCT word n-gram shingles as 60-bit integers (top 15 md5
+    hex chars, base-16 — the values of ``word_shingles(as_hash=True)``),
+    and ``mh{i}`` the MinHash component: the min over the shingles of the
+    60-bit hash of ``"{i}#{shingle}"``. ``sh_arr`` order is unspecified;
+    consumers use it as a set (``size``, ``array_intersect``).
 
     Docs with < n tokens are dropped (no shingles -> can never pair),
-    matching ``word_shingles``' row semantics. Docs whose text is NULL
-    drop with them (split(NULL) -> NULL -> size -1 < n).
+    matching ``word_shingles``' row semantics; so are docs whose text is
+    NULL.
 
-    At 100 TB this is the difference between shuffling the shingle stream
-    (10-100x the corpus bytes) to build signatures and shuffling nothing:
-    the array lives only inside the scan stage's projection unless a
-    downstream consumer explicitly keeps it.
+    Plan: the docs are repartitioned by id (the one exchange, one row per
+    document), then split, exploded into shingle positions, hashed as
+    plain row expressions and aggregated by id (``collect_set`` + one
+    ``min`` per seed) with the partial and final aggregate in the same
+    stage: the shingle stream is never shuffled, and every md5 runs in
+    whole-stage codegen. Per-element ``transform`` lambdas over an array
+    compute the same values interpreted (``ArrayTransform`` is a
+    ``CodegenFallback``): ``dedup_minhash_lsh`` on the sf0.1 corpus took
+    12.2 CPU-s per run that way against 7.9 with this plan (4 vCPU, warm
+    JVM, ``scripts/jvm_cpu_split.py``).
     """
-    toks = F.split(F.col(text_col), " ")
-    parts = ", ".join(f"__toks__[i+{j}]" for j in range(n))
-    shingle = F.expr(
-        f"transform(sequence(0, size(__toks__)-{n}), i -> concat_ws(' ', {parts}))"
-    )
-    hashed = F.array_distinct(
-        F.transform(
-            shingle,
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast(
-                "bigint"
+    idc = f"`{id_col}`"
+    parts = ", ".join(f"__toks__[__i__ + {j}]" for j in range(n))
+
+    def h60(expr: str) -> str:
+        return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+    shingles = (
+        df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__toks__"))
+        .filter(F.size("__toks__") >= n)
+        .repartition(id_col)
+        .selectExpr(
+            idc, "__toks__", f"explode(sequence(0, size(__toks__) - {n})) AS __i__"
+        )
+        .selectExpr(idc, h60(f"concat_ws(' ', {parts})") + " AS __sh__")
+        .selectExpr(
+            idc,
+            "__sh__",
+            *(
+                h60(f"concat('{i}#', CAST(__sh__ AS STRING))") + f" AS __h{i}__"
+                for i in range(num_hashes)
             ),
         )
     )
-    return (
-        spread(df)
-        .select(F.col(id_col), toks.alias("__toks__"))
-        .filter(F.size("__toks__") >= n)
-        .select(F.col(id_col), hashed.alias("sh_arr"))
+    return shingles.groupBy(id_col).agg(
+        F.collect_set("__sh__").alias("sh_arr"),
+        *(F.min(f"__h{i}__").alias(f"mh{i}") for i in range(num_hashes)),
     )
-
-
-def minhash_from_shingle_array(
-    df: DataFrame, id_col: str, arr_col: str = "sh_arr", num_hashes: int = 32
-) -> DataFrame:
-    """MinHash signature from a per-doc shingle-hash ARRAY: for each seeded
-    hash function i, min over the array of the 60-bit integer hash of
-    ``"{i}#{shingle}"`` — bit-identical to :func:`minhash_signatures` over
-    the exploded form, but ZERO shuffles: every min is an ``array_min``
-    over a ``transform``, pure map-side whole-stage codegen. The groupBy
-    the exploded form pays re-aggregates rows that were never apart.
-    """
-    def seeded(i: int):
-        # One-arg closure per seed: a two-parameter lambda (s, i=i) would
-        # make F.transform pass the ARRAY INDEX as the second argument,
-        # silently replacing the seed.
-        return lambda s: F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{i}#"), s.cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint")
-
-    mins = [
-        F.array_min(F.transform(F.col(arr_col), seeded(i))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return df.select(F.col(id_col), *mins)
 
 
 def _simhash_hex(votes: DataFrame, id_col: str) -> DataFrame:

@@ -1432,11 +1432,12 @@ class Catalog:
         does the counting :meth:`_check_constraints` run, so a clean write
         costs no extra job and a violation raises the same
         :class:`ConstraintViolation` with the same counts. ``append``,
-        ``update_where``, ``replace_where`` and ``overwrite`` write through
-        here. ``rebalance`` hints a partitioned write to be rebalanced on
-        its partition columns (Spark's optimized write: AQE merges small
-        shuffle partitions and splits skewed ones); ``overwrite`` leaves it
-        off, since compaction's file count and sort order must survive."""
+        ``update_where``, ``replace_where``, ``overwrite`` and
+        ``overwrite_partitions`` write through here. ``rebalance`` hints a
+        partitioned write to be rebalanced on its partition columns
+        (Spark's optimized write: AQE merges small shuffle partitions and
+        splits skewed ones); the two overwrites leave it off, since
+        compaction's file count and sort order must survive."""
         checks = self._with_not_null(spec.name, df, spec.constraints)
         out = self._to_physical(spec, _enforced(spec, df, checks))
         if rebalance and spec.partition_by:
@@ -2138,22 +2139,23 @@ class Catalog:
         # one staging dir — commit-time conflict detection can only fire
         # if both writes stage intact).
         tmp = spec.path + f"__inc_staging-{os.getpid()}-{time.time_ns()}"
-        writer = self._to_physical(spec, df).write.format(
-            spec.fmt
-        ).mode("overwrite").partitionBy(*spec.partition_by)
-        writer.save(tmp)
-        stamp = str(time.time_ns())
-        moved = 0
-        for rel in self._staged_partition_dirs(tmp, len(spec.partition_by)):
-            dst = os.path.join(spec.path, rel)
-            if os.path.isdir(dst):
-                trash = os.path.join(self._trash_dir(name), stamp, rel)
-                os.makedirs(os.path.dirname(trash), exist_ok=True)
-                os.replace(dst, trash)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(os.path.join(tmp, rel), dst)
-            moved += 1
-        shutil.rmtree(tmp, ignore_errors=True)
+        try:
+            self._write_checked(spec, df, tmp)
+            stamp = str(time.time_ns())
+            moved = 0
+            for rel in self._staged_partition_dirs(
+                tmp, len(spec.partition_by)
+            ):
+                dst = os.path.join(spec.path, rel)
+                if os.path.isdir(dst):
+                    trash = os.path.join(self._trash_dir(name), stamp, rel)
+                    os.makedirs(os.path.dirname(trash), exist_ok=True)
+                    os.replace(dst, trash)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.replace(os.path.join(tmp, rel), dst)
+                moved += 1
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
         self._commit(name, "overwrite_partitions")
         return moved
 

@@ -195,18 +195,19 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from ..extensions.dedup import minhash_from_shingle_array, shingle_hash_array
+    from ..extensions.dedup import minhash_shingle_sets
 
     docs = t(spark, sf_dir, "documents")
-    # Per-doc shingle-hash ARRAYS: signatures and candidate verification
-    # both come from this one map-side frame — the corpus-wide shingle
-    # stream (10-100x the corpus bytes) never exists, so the only shuffles
-    # left are the band self-join and the candidate id-joins. Branched 3
-    # ways (signature, both verify sides) — persist, as Spark does not
-    # dedupe common subplans (see dedup_ngram_jaccard).
-    base = tracked_persist(shingle_hash_array(docs, "doc_id", "text", n=3))
-    sig = minhash_from_shingle_array(base, "doc_id", "sh_arr", num_hashes=8)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=8, band_size=2)
+    # Per-doc shingle-hash sets and signatures from one aggregate whose
+    # only exchange carries one row per doc — the corpus-wide shingle
+    # stream (10-100x the corpus bytes) is never shuffled, so the only
+    # other shuffles are the band self-join and the candidate id-joins.
+    # Branched 3 ways (signature, both verify sides) — persist, as Spark
+    # does not dedupe common subplans (see dedup_ngram_jaccard).
+    base = tracked_persist(
+        minhash_shingle_sets(docs, "doc_id", "text", n=3, num_hashes=8)
+    )
+    cand = lsh_candidate_pairs(base, "doc_id", num_hashes=8, band_size=2)
     # Verify candidates with exact Jaccard (LSH = recall filter, not truth):
     # pull both docs' shingle arrays onto the candidate row and intersect
     # in the projection — arrays are distinct by construction, so
@@ -699,19 +700,10 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly in SQL."""
     from pyspark.sql import functions as F
 
-    from ..extensions.dedup import (
-        incremental_lsh_candidates,
-        minhash_from_shingle_array,
-        shingle_hash_array,
-    )
+    from ..extensions.dedup import incremental_lsh_candidates, minhash_shingle_sets
 
     docs = t(spark, sf_dir, "documents")
-    sig = minhash_from_shingle_array(
-        shingle_hash_array(docs, "doc_id", "text", n=3),
-        "doc_id",
-        "sh_arr",
-        num_hashes=8,
-    )
+    sig = minhash_shingle_sets(docs, "doc_id", "text", n=3, num_hashes=8)
     stack_args = []
     for b in range(4):
         cols = [f"mh{b * 2 + r}" for r in range(2)]
@@ -886,25 +878,20 @@ def minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized signature join; no new shuffle shape."""
     from pyspark.sql import functions as F
 
-    from ..extensions.dedup import (
-        lsh_candidate_pairs,
-        minhash_from_shingle_array,
-        shingle_hash_array,
-    )
+    from ..extensions.dedup import lsh_candidate_pairs, minhash_shingle_sets
 
     docs = t(spark, sf_dir, "documents")
-    base = tracked_persist(shingle_hash_array(docs, "doc_id", "text", n=3))
-    sig = tracked_persist(
-        minhash_from_shingle_array(base, "doc_id", "sh_arr", num_hashes=_MH_N)
+    base = tracked_persist(
+        minhash_shingle_sets(docs, "doc_id", "text", n=3, num_hashes=_MH_N)
     )
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=_MH_N, band_size=2)
+    cand = lsh_candidate_pairs(base, "doc_id", num_hashes=_MH_N, band_size=2)
     a = base.select(F.col("doc_id").alias("a_id"), F.col("sh_arr").alias("a_arr"))
     b = base.select(F.col("doc_id").alias("b_id"), F.col("sh_arr").alias("b_arr"))
-    sa = sig.select(
+    sa = base.select(
         F.col("doc_id").alias("a_id"),
         *[F.col(f"mh{i}").alias(f"a_mh{i}") for i in range(_MH_N)],
     )
-    sb = sig.select(
+    sb = base.select(
         F.col("doc_id").alias("b_id"),
         *[F.col(f"mh{i}").alias(f"b_mh{i}") for i in range(_MH_N)],
     )

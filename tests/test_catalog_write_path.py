@@ -149,13 +149,16 @@ def _snapshot(path: str) -> list[str]:
     )
 
 
-@pytest.mark.parametrize("writer", ["update", "replace_where", "overwrite"])
+@pytest.mark.parametrize(
+    "writer", ["update", "replace_where", "overwrite", "overwrite_partitions"]
+)
 def test_every_writer_checks_in_the_write_and_leaves_nothing(
     spark, catalog, writer
 ):
-    """update_where, replace_where and overwrite share append's in-write
-    check: the same counted ConstraintViolation, no new version, and no
-    data file, deletion-vector sidecar or staging directory left."""
+    """update_where, replace_where, overwrite and overwrite_partitions
+    share append's in-write check: the same counted ConstraintViolation,
+    no new version, and no data file, deletion-vector sidecar or staging
+    directory left."""
     catalog.register("t.rw", SCHEMA, partition_by=("p",))
     catalog.append(
         "t.rw", spark.createDataFrame([(1, 5, "a"), (2, 6, "b")], SCHEMA)
@@ -175,8 +178,13 @@ def test_every_writer_checks_in_the_write_and_leaves_nothing(
                 "t.rw", "p = 'a'",
                 spark.createDataFrame([(1, -5, "a"), (3, 0, "a")], SCHEMA),
             )
-        else:
+        elif writer == "overwrite":
             catalog.overwrite(
+                "t.rw",
+                spark.createDataFrame([(1, -5, "a"), (3, 0, "b")], SCHEMA),
+            )
+        else:
+            catalog.overwrite_partitions(
                 "t.rw",
                 spark.createDataFrame([(1, -5, "a"), (3, 0, "b")], SCHEMA),
             )

@@ -30,6 +30,7 @@ def test_all_probe_scripts_import():
         "shuffle_report.py",
         "streaming_state_report.py",
         "record_fingerprints.py",
+        "jvm_cpu_split.py",
     ):
         _load(name)
 

@@ -36,3 +36,25 @@ def test_explicit_shuffle_partitions_survive(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_generated_classes_are_reused_after_many_other_plans(spark):
+    """get_spark keeps more generated classes than Spark's default codegen
+    cache (100): after 130 other distinct plans, re-running the first one
+    compiles nothing. At the default size it recompiles."""
+    compiles = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source
+        .CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
+
+    def run(i: int) -> None:
+        # Integer literals are inlined into the generated code, so every
+        # i is a distinct class.
+        spark.range(4).selectExpr(f"id * {i + 2} + {i + 3} AS v").collect()
+
+    run(0)
+    for i in range(1, 131):
+        run(i)
+    before = compiles.getCount()
+    run(0)
+    assert compiles.getCount() - before == 0
