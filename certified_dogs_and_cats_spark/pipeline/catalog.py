@@ -10,7 +10,11 @@ Versioning (Delta time-travel parity, reference sql/register_bronze.sql:2-4
 semantics): every committed write appends an entry to a per-table manifest
 (``_meta/<table>/manifest.json``) recording the version number, action, and
 the RELATIVE data-file list that constitutes the table at that version —
-the same liveness-by-log idea as Delta's transaction log. ``table(name,
+the same liveness-by-log idea as Delta's transaction log. Table metadata
+(partitioning, clustering, column map, DEFAULTs, row filter and column
+masks) lives in the same log, as a ``meta`` object on the commits that
+change it (Delta's metaData action), so a metadata change is one atomic
+commit and a new session re-registers it from the head. ``table(name,
 version=N)`` reconstructs snapshot N by resolving those files against the
 live directory and the ``_trash`` stamps where overwrites retired them;
 ``vacuum`` purging a stamp is what finally makes old versions unreadable
@@ -126,11 +130,14 @@ class TableSpec:
     # providing the column is an error, Delta's ALWAYS contract); see
     # Catalog._apply_identity for the allocation scheme.
     identity: dict[str, dict] = field(default_factory=dict)
+    # ``partition_by`` and the fields from here down are the table
+    # metadata kept in the commit log (``_META_FIELDS``): each change is
+    # one commit, and a new session's ``register`` reads them back.
+    #
     # Column mapping (Delta columnMapping.mode=name): logical column ->
     # physical name stored in data files. Empty = identity mapping. Only
     # populated by metadata-only RENAME/DROP COLUMN on tables with
-    # TBLPROPERTIES ('delta.columnMapping.mode'='name'); persisted in
-    # _meta/<table>/column_map.json so it survives sessions.
+    # TBLPROPERTIES ('delta.columnMapping.mode'='name').
     column_map: dict[str, str] = field(default_factory=dict)
     # Physical names present in existing files but no longer mapped to a
     # logical column (metadata-only drops): reserved so a re-added column
@@ -139,21 +146,20 @@ class TableSpec:
     # Declared clustering key (Delta liquid clustering, CLUSTER BY):
     # OPTIMIZE without an explicit ZORDER clause clusters by these.
     # Metadata-only to set/alter; existing files recluster at the next
-    # OPTIMIZE, never eagerly. Persisted in _meta/<table>/clustering.json.
+    # OPTIMIZE, never eagerly.
     cluster_by: tuple[str, ...] = ()
     # Column DEFAULTs (Delta CURRENT DEFAULT parity): col -> SQL literal/
     # expression string, materialized AT WRITE TIME when a writer omits
     # the column (an explicitly provided NULL stays NULL — defaults are
     # not NULL-coalescing). Rows written before the default existed keep
-    # their stored values (existing files are never rewritten); persisted
-    # in _meta/<table>/defaults.json.
+    # their stored values (existing files are never rewritten).
     defaults: dict[str, str] = field(default_factory=dict)
     # Read-time governance (Unity/Snowflake-style): a row-filter SQL
     # predicate and per-column mask expressions, applied by
     # :meth:`Catalog.governed_table` (the SQL front door reads through
     # it); raw :meth:`Catalog.table` stays policy-free so maintenance
     # (OPTIMIZE, MERGE internals, constraint checks) operates on the
-    # actual data. Persisted in _meta/<table>/governance.json.
+    # actual data.
     row_filter: str | None = None
     column_masks: dict[str, str] = field(default_factory=dict)
 
@@ -171,6 +177,33 @@ class TableSpec:
     @property
     def mapping_mode(self) -> bool:
         return self.properties.get("delta.columnMapping.mode") == "name"
+
+
+#: TableSpec fields kept in the commit log's ``meta`` object.
+_META_FIELDS = (
+    "partition_by",
+    "cluster_by",
+    "column_map",
+    "dropped_physical",
+    "defaults",
+    "row_filter",
+    "column_masks",
+)
+
+
+def _spec_meta(spec: TableSpec, **changes) -> dict:
+    """The spec's metadata, with ``changes`` applied, as the JSON
+    ``meta`` object a commit stores."""
+    meta = {k: getattr(spec, k) for k in _META_FIELDS}
+    return json.loads(json.dumps({**meta, **changes}))
+
+
+def _adopt_meta(spec: TableSpec, meta: dict) -> None:
+    """Set the spec's metadata fields from a commit's ``meta`` object."""
+    meta = json.loads(json.dumps(meta))  # the spec owns its copy
+    for k in _META_FIELDS:
+        v = meta[k]
+        setattr(spec, k, tuple(v) if k in ("partition_by", "cluster_by") else v)
 
 
 #: (path, mtime_ns) -> parsed checkpoint entry (see Catalog._read_checkpoint).
@@ -221,14 +254,13 @@ class Catalog:
             fmt=fmt,
         )
         self.tables[name] = spec
-        # Rehydrate any persisted column mapping (metadata-only renames
-        # survive sessions; the registered schema uses logical names),
-        # evolved partitioning, and declared clustering.
-        self.load_column_map(name)
-        self.load_layout(name)
-        self.load_clustering(name)
-        self.load_defaults(name)
-        self.load_governance(name)
+        # The log's metadata wins over the registration arguments: a new
+        # session re-registers the original schema and layout, while
+        # renames, evolved partitioning, clustering, DEFAULTs and
+        # policies live in the head's ``meta`` (empty after a drop).
+        head = self._load_manifest(name)
+        if head and head[-1].get("meta"):
+            _adopt_meta(spec, head[-1]["meta"])
         return spec
 
     def exists(self, name: str) -> bool:
@@ -820,19 +852,26 @@ class Catalog:
         checkpoint have no grounded base; attaching file lists replayed
         from an empty set would be silently WRONG, so those entries are
         dropped — their versions read as nonexistent, matching the fact
-        that their data files are already past retention."""
+        that their data files are already past retention.
+
+        Table metadata replays the same way: a snapshot carries its
+        ``meta``, a delta entry carries one only when the metadata
+        changed, and every replayed copy gets the ``meta`` in force at
+        its version (treat it as read-only: copies share it)."""
         out: list[dict] = []
         running: set[str] = set()
+        meta: dict = {}
         grounded = False
         prev_version = 0
         for raw in log:
             e = dict(raw)
             if "files" in e:
                 running = set(e["files"])
+                meta = e.get("meta", {})
                 grounded = True
             else:
                 if e["version"] == 1:
-                    running, grounded = set(), True
+                    running, meta, grounded = set(), {}, True
                 elif e["version"] != prev_version + 1 or not grounded:
                     grounded = False
                     prev_version = e["version"]
@@ -841,6 +880,8 @@ class Catalog:
                     e.pop("remove", ())
                 )
                 e["files"] = sorted(running)
+                meta = e.get("meta", meta)
+            e["meta"] = meta
             prev_version = e["version"]
             out.append(e)
         return out
@@ -868,6 +909,7 @@ class Catalog:
         dv: list[str] | None = None,
         rebase: bool = True,
         expected_base: int | None = None,
+        meta: dict | None = None,
     ) -> int:
         """Commit a new table version; returns its number. The manifest is
         the analog of Delta's transaction log: liveness is defined by the
@@ -886,7 +928,9 @@ class Catalog:
         log and retries — concurrent appends all land, in some order.
         Without ``added`` the entry snapshots the live directory
         (whole-table rewrite semantics), which cannot be rebased: a lost
-        claim raises :class:`ConcurrentWriteConflict`."""
+        claim raises :class:`ConcurrentWriteConflict`. ``meta`` replaces
+        the table metadata from this version on (see :meth:`_replay`);
+        without it the predecessor's carries forward."""
         spec = self.tables[name]
         cdir = self._commits_dir(name)
         os.makedirs(cdir, exist_ok=True)
@@ -950,6 +994,8 @@ class Catalog:
                 entry["dv"] = dvs
             if txn is not None:
                 entry["txn"] = txn
+            if meta is not None:
+                entry["meta"] = meta
             tmp = os.path.join(cdir, f".tmp-{os.getpid()}-{time.time_ns()}")
             with open(tmp, "w") as f:
                 json.dump(entry, f)
@@ -989,7 +1035,14 @@ class Catalog:
                 self.checkpoint_interval
                 and version - floor >= self.checkpoint_interval
             ):
-                self._write_checkpoint(name, log, version, files, dvs)
+                head_meta = (
+                    meta
+                    if meta is not None
+                    else manifest[-1]["meta"] if manifest else {}
+                )
+                self._write_checkpoint(
+                    name, log, version, files, dvs, head_meta
+                )
                 floor = version
             # Merge the derived manifest (in DELTA form — the raw log
             # plus this commit's delta entry), truncated to entries the
@@ -1016,6 +1069,18 @@ class Catalog:
             f"{name}: could not claim a version for {action!r} after 50 "
             "attempts (pathological commit contention)"
         )
+
+    def _commit_meta(self, name: str, action: str, **changes) -> None:
+        """Commit a metadata-only version (Delta's metaData action): the
+        head's file list, and the spec's metadata with ``changes``
+        applied as its ``meta``. It does not rebase: the new metadata
+        was derived from the spec, so a lost claim raises
+        :class:`ConcurrentWriteConflict`. The in-memory spec changes
+        only once the version is claimed."""
+        spec = self.tables[name]
+        meta = _spec_meta(spec, **changes)
+        self._commit(name, action, added=[], rebase=False, meta=meta)
+        _adopt_meta(spec, meta)
 
     def txn_committed(self, name: str, stream_id: str, batch_id: int) -> bool:
         """True if a commit carrying this (stream_id, batch_id) txn marker
@@ -1046,10 +1111,12 @@ class Catalog:
         version: int,
         files: list[str],
         dvs: list[str],
+        meta: dict,
     ) -> None:
         """Write ``checkpoints/<version>.json``: the full head state
-        (file list + DV sidecars) plus the per-stream txn high-water
-        folded from the previous checkpoint and every marker since."""
+        (file list, DV sidecars, table metadata) plus the per-stream txn
+        high-water folded from the previous checkpoint and every marker
+        since."""
         txn_high: dict[str, int] = {}
         for e in log:
             if e.get("action") == "checkpoint":
@@ -1065,6 +1132,7 @@ class Catalog:
             "ts_ns": time.time_ns(),
             "files": list(files),
             "txn_high": txn_high,
+            "meta": meta,
         }
         if dvs:
             ckpt["dv"] = list(dvs)
@@ -1361,12 +1429,9 @@ class Catalog:
                 df = df.withColumn(col, F.expr(expr).cast(typ))
         return df
 
-    def _defaults_path(self, name: str) -> str:
-        return os.path.join(self._meta_dir(name), "defaults.json")
-
     def set_default(self, name: str, col: str, expr: str | None) -> None:
         """Set (or, with ``expr=None``, drop) a column's write-time
-        DEFAULT; metadata-only, persisted beside the manifest."""
+        DEFAULT; a metadata-only commit."""
         spec = self.tables[name]
         if not any(f.name == col for f in spec.schema.fields):
             raise ValueError(f"column not found: {col}")
@@ -1375,20 +1440,12 @@ class Catalog:
                 f"column {col!r} is generated/identity: it cannot also "
                 "carry a DEFAULT"
             )
+        defaults = dict(spec.defaults)
         if expr is None:
-            spec.defaults.pop(col, None)
+            defaults.pop(col, None)
         else:
-            spec.defaults[col] = expr
-        os.makedirs(self._meta_dir(name), exist_ok=True)
-        with open(self._defaults_path(name), "w") as fh:
-            json.dump(spec.defaults, fh, indent=1)
-
-    def load_defaults(self, name: str) -> None:
-        spec = self.tables[name]
-        p = self._defaults_path(name)
-        if os.path.exists(p):
-            with open(p) as fh:
-                spec.defaults = json.load(fh)
+            defaults[col] = expr
+        self._commit_meta(name, "set_default", defaults=defaults)
 
     def _apply_generated(self, spec: TableSpec, df: DataFrame) -> DataFrame:
         """Delta generated-column write contract: compute each generated
@@ -1775,9 +1832,11 @@ class Catalog:
         exactly which files each append added (see :meth:`_commit`), so an
         append's changes are one pruned read of those files — cost scales
         with the change, not the table, which is what makes tailing a
-        100 TB table's feed feasible. Whole-table rewrite commits
-        (overwrite / compact / restore / column changes) fall back to a
-        snapshot diff of the bounding versions (``exceptAll`` both ways —
+        100 TB table's feed feasible. Metadata-only commits (same files,
+        same deletion vectors) change no row and are skipped. Whole-table
+        rewrite commits (overwrite / compact / restore / copy-on-write
+        column changes) fall back to a snapshot diff of the bounding
+        versions (``exceptAll`` both ways —
         multiset semantics, so duplicate-row multiplicity changes surface).
         Divergence from Delta CDF, documented: updates appear as
         delete+insert pairs, never update_pre/postimage (the engine has no
@@ -1833,6 +1892,7 @@ class Catalog:
             if entry is None:
                 v += 1
                 continue
+            base = by_version.get(v - 1, {"files": []})
             if entry["action"] == "append":
                 # Batch the maximal RUN of consecutive append commits into
                 # ONE read: a consumer replaying a long history would
@@ -1877,6 +1937,10 @@ class Catalog:
                     )
                     .drop("__cdf_file")
                 )
+            elif set(entry["files"]) == set(base["files"]) and set(
+                entry.get("dv", [])
+            ) == set(base.get("dv", [])):
+                v += 1  # metadata-only: no snapshot diff needed
             else:
                 cur = self.table(name, version=v)
                 prev = (
@@ -1952,8 +2016,11 @@ class Catalog:
             n = 1
             while f"{field.name}_r{n}" in in_use:
                 n += 1
-            spec.column_map[field.name] = f"{field.name}_r{n}"
-            self._save_column_map(spec)
+            self._commit_meta(
+                name,
+                "add_column",
+                column_map={**spec.column_map, field.name: f"{field.name}_r{n}"},
+            )
         spec.schema = T.StructType([*spec.schema.fields, field])
 
     def _guard_column_change(self, spec: TableSpec, col: str) -> None:
@@ -1986,39 +2053,13 @@ class Catalog:
                 f"{gen_hit}; drop them first"
             )
 
-    # --- column mapping persistence --------------------------------------
-
-    def _column_map_path(self, name: str) -> str:
-        return os.path.join(self._meta_dir(name), "column_map.json")
-
-    def _save_column_map(self, spec: TableSpec) -> None:
-        os.makedirs(self._meta_dir(spec.name), exist_ok=True)
-        tmp = self._column_map_path(spec.name) + f".tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"map": spec.column_map, "dropped": spec.dropped_physical}, f
-            )
-        os.replace(tmp, self._column_map_path(spec.name))
-
-    def load_column_map(self, name: str) -> None:
-        """Rehydrate the logical->physical map from the table's metadata
-        (new sessions re-register schemas; the mapping must come from disk
-        or renamed columns would read the wrong physical name)."""
-        spec = self.tables[name]
-        path = self._column_map_path(name)
-        if os.path.isfile(path):
-            with open(path) as f:
-                data = json.load(f)
-            spec.column_map = dict(data.get("map", {}))
-            spec.dropped_physical = list(data.get("dropped", []))
-
     def rename_column(self, name: str, old: str, new: str) -> None:
         """ALTER TABLE RENAME COLUMN.
 
         With TBLPROPERTIES ('delta.columnMapping.mode'='name') this is
         METADATA-ONLY (Delta column mapping): the physical name in every
         existing file stays, only the logical->physical map changes — at
-        100 TB a rename costs one JSON write instead of rewriting the
+        100 TB a rename costs one commit instead of rewriting the
         fleet, and time travel keeps working because old files' physical
         names never change. Without the property it is the classic
         copy-on-write rewrite. Partition, constraint-referenced, and
@@ -2038,13 +2079,11 @@ class Catalog:
             ]
         )
         if spec.mapping_mode:
-            spec.column_map[new] = spec.physical(old)
-            spec.column_map.pop(old, None)
+            column_map = {**spec.column_map, new: spec.physical(old)}
+            column_map.pop(old, None)
+            self._commit_meta(name, "rename_column", column_map=column_map)
             spec.schema = new_schema
             self._rename_col_metadata(spec, old, new)
-            self._save_column_map(spec)
-            if self.exists(name):
-                self._commit(name, "rename_column")
             return
         df = self.table(name).withColumnRenamed(old, new)
         spec.schema = new_schema
@@ -2087,14 +2126,17 @@ class Catalog:
             [f for f in spec.schema.fields if f.name != col]
         )
         if spec.mapping_mode:
-            spec.dropped_physical.append(spec.physical(col))
-            spec.column_map.pop(col, None)
+            self._commit_meta(
+                name,
+                "drop_column",
+                column_map={
+                    k: v for k, v in spec.column_map.items() if k != col
+                },
+                dropped_physical=[*spec.dropped_physical, spec.physical(col)],
+            )
             spec.generated.pop(col, None)
             spec.identity.pop(col, None)
             spec.schema = new_schema
-            self._save_column_map(spec)
-            if self.exists(name):
-                self._commit(name, "drop_column")
             return
         df = self.table(name).drop(col)
         spec.schema = new_schema
@@ -2177,14 +2219,16 @@ class Catalog:
         return rels
 
     def drop(self, name: str) -> None:
-        """DROP TABLE: deregister and retire the data into _trash (recoverable
-        until :meth:`vacuum` purges it — Delta-style DROP semantics)."""
+        """DROP TABLE: deregister, clear the table metadata, and retire the
+        data into _trash (recoverable until :meth:`vacuum` purges it —
+        Delta-style DROP semantics)."""
         spec = self.tables[name]
         if os.path.isdir(spec.path):
             trash = os.path.join(self._trash_dir(name), str(time.time_ns()))
             os.makedirs(os.path.dirname(trash), exist_ok=True)
             os.replace(spec.path, trash)
-        self._commit(name, "drop")  # empty file list: the dropped state
+        # Empty file list and empty metadata: the dropped state.
+        self._commit(name, "drop", meta={})
         del self.tables[name]
 
     def _trash_dir(self, name: str) -> str:
@@ -2231,27 +2275,17 @@ class Catalog:
             name=dst,
             path=os.path.join(self.root, dst.replace(".", "/")),
             schema=T.StructType(list(sspec.schema.fields)),
-            partition_by=tuple(sspec.partition_by),
             fmt=sspec.fmt,
             constraints=dict(sspec.constraints),
             properties=dict(sspec.properties),
             generated=dict(sspec.generated),
             identity=dict(sspec.identity),
-            column_map=dict(sspec.column_map),
-            dropped_physical=list(sspec.dropped_physical),
         )
-        if spec.column_map or spec.dropped_physical:
-            # Persist the inherited mapping under the clone's own meta dir
-            # (spec.name is dst, so _save_column_map writes there).
-            self._save_column_map(spec)
-        # An evolved partition layout persists for the clone too —
-        # otherwise a new session's register() would revert the clone to
-        # its registration-time layout and write the wrong directories.
-        if os.path.isfile(self._layout_path(src)):
-            os.makedirs(self._meta_dir(dst), exist_ok=True)
-            shutil.copy2(
-                self._layout_path(src), self._layout_path(dst)
-            )
+        # The clone reads its version with the source's metadata, as time
+        # travel on the source does (the column map must match the
+        # schema, which is the head's), and its first commit records it.
+        meta = _spec_meta(sspec)
+        _adopt_meta(spec, meta)
         # Identity high watermarks carry over (Delta clone semantics):
         # replay the source's block claims so the clone's next append
         # allocates ABOVE every id already present in the cloned data.
@@ -2308,7 +2342,7 @@ class Catalog:
                 os.makedirs(os.path.dirname(out), exist_ok=True)
                 transfer(src_dv, out)
         self.tables[dst] = spec
-        self._commit(dst, "clone", dv=dvs or None)
+        self._commit(dst, "clone", dv=dvs or None, meta=meta)
         return spec
 
     def overwrite(
@@ -2482,9 +2516,6 @@ class Catalog:
         sigs = {_layout_sig(rel) for rel in files}
         return bool(sigs) and sigs != {tuple(spec.partition_by)}
 
-    def _layout_path(self, name: str) -> str:
-        return os.path.join(self._meta_dir(name), "layout.json")
-
     def set_partitioning(
         self, name: str, partition_by: tuple[str, ...]
     ) -> None:
@@ -2497,10 +2528,10 @@ class Catalog:
         (including stat-based skipping: old files prune on the column's
         footer stats, new files on the directory value).
 
-        Write cost: one JSON. The trade: directory-level pruning only
-        covers new-era files until a full :meth:`compact` rewrites the
-        table under the current layout (after which the table is
-        un-mixed again); partition-scoped maintenance
+        Write cost: one metadata-only commit. The trade: directory-level
+        pruning only covers new-era files until a full :meth:`compact`
+        rewrites the table under the current layout (after which the
+        table is un-mixed again); partition-scoped maintenance
         (:meth:`overwrite_partitions`, ``OPTIMIZE WHERE``) refuses while
         layouts are mixed because "a partition" is not one directory set.
         """
@@ -2511,32 +2542,16 @@ class Catalog:
             raise ValueError(
                 f"{name}: partition columns not in schema: {missing}"
             )
-        spec.partition_by = tuple(partition_by)
-        os.makedirs(self._meta_dir(name), exist_ok=True)
-        tmp = self._layout_path(name) + f".tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"partition_by": list(partition_by)}, f)
-        os.replace(tmp, self._layout_path(name))
-        if self.exists(name):
-            self._commit(name, "set_partitioning")
-
-    def load_layout(self, name: str) -> None:
-        """Rehydrate an evolved partitioning (new sessions re-register
-        with the original layout; the persisted one wins)."""
-        spec = self.tables[name]
-        if os.path.isfile(self._layout_path(name)):
-            with open(self._layout_path(name)) as f:
-                spec.partition_by = tuple(json.load(f)["partition_by"])
-
-    def _clustering_path(self, name: str) -> str:
-        return os.path.join(self._meta_dir(name), "clustering.json")
+        self._commit_meta(
+            name, "set_partitioning", partition_by=partition_by
+        )
 
     def set_clustering(self, name: str, cluster_by: tuple[str, ...]) -> None:
         """Delta liquid-clustering parity (``CLUSTER BY`` /
         ``ALTER TABLE ... CLUSTER BY``): declare the clustering key so
         every subsequent OPTIMIZE — explicit, ``maybe_compact``
         auto-compaction, or partition-scoped — clusters by it without the
-        caller naming columns. Metadata-only (one JSON write): existing
+        caller naming columns. Metadata-only (one commit): existing
         files keep their order until the next OPTIMIZE rewrites them,
         exactly Delta's incremental-clustering contract. Pass ``()`` for
         ``CLUSTER BY NONE``."""
@@ -2554,48 +2569,12 @@ class Catalog:
                 " clustering and directory partitioning are exclusive per"
                 " column"
             )
-        spec.cluster_by = tuple(cluster_by)
-        os.makedirs(self._meta_dir(name), exist_ok=True)
-        tmp = self._clustering_path(name) + f".tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"cluster_by": list(cluster_by)}, f)
-        os.replace(tmp, self._clustering_path(name))
-
-    def load_clustering(self, name: str) -> None:
-        spec = self.tables[name]
-        if os.path.isfile(self._clustering_path(name)):
-            with open(self._clustering_path(name)) as f:
-                spec.cluster_by = tuple(json.load(f)["cluster_by"])
+        self._commit_meta(name, "set_clustering", cluster_by=cluster_by)
 
     # -- read-time governance: row filters + column masks ---------------------
-    def _governance_path(self, name: str) -> str:
-        return os.path.join(self._meta_dir(name), "governance.json")
-
-    def _persist_governance(self, name: str) -> None:
-        spec = self.tables[name]
-        os.makedirs(self._meta_dir(name), exist_ok=True)
-        tmp = self._governance_path(name) + f".tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "row_filter": spec.row_filter,
-                    "column_masks": spec.column_masks,
-                },
-                f,
-            )
-        os.replace(tmp, self._governance_path(name))
-
-    def load_governance(self, name: str) -> None:
-        spec = self.tables[name]
-        if os.path.isfile(self._governance_path(name)):
-            with open(self._governance_path(name)) as f:
-                data = json.load(f)
-            spec.row_filter = data.get("row_filter")
-            spec.column_masks = dict(data.get("column_masks", {}))
-
     def set_row_filter(self, name: str, expr: str | None) -> None:
         """Declare (or clear, with ``None``) a row-filter predicate every
-        governed read applies. Metadata-only: one JSON write, no data
+        governed read applies. Metadata-only: one commit, no data
         rewrite — the filter evaluates inside each reader's scan, so it
         pushes down into parquet like any literal predicate (the governed
         path costs what the user's own WHERE would). Validated against
@@ -2609,8 +2588,7 @@ class Catalog:
                 raise ValueError(
                     f"{name}: bad row filter {expr!r}: {e}"
                 ) from e
-        spec.row_filter = expr
-        self._persist_governance(name)
+        self._commit_meta(name, "set_row_filter", row_filter=expr)
 
     def set_column_mask(self, name: str, col: str, expr: str | None) -> None:
         """Declare (or clear) a mask expression for ``col``. The mask may
@@ -2624,8 +2602,9 @@ class Catalog:
         declared = {f.name: f.dataType for f in spec.schema.fields}
         if col not in declared:
             raise ValueError(f"{name}: no such column {col!r}")
+        masks = dict(spec.column_masks)
         if expr is None:
-            spec.column_masks.pop(col, None)
+            masks.pop(col, None)
         else:
             from pyspark.sql import functions as F
 
@@ -2638,8 +2617,8 @@ class Catalog:
                 raise ValueError(
                     f"{name}: bad mask for {col!r}: {expr!r}: {e}"
                 ) from e
-            spec.column_masks[col] = expr
-        self._persist_governance(name)
+            masks[col] = expr
+        self._commit_meta(name, "set_column_mask", column_masks=masks)
 
     def _apply_policies(self, df: DataFrame, name: str) -> DataFrame:
         """Row filter first (evaluated on RAW values), then every column

@@ -26,7 +26,6 @@ downstream ``foreachBatch`` MERGE can apply them idempotently. Use
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -46,43 +45,14 @@ class _FilePartition(InputPartition):
     version: int
 
 
-def _load_manifest(meta_dir: str) -> list[dict]:
-    """Commit files are the source of truth (same rule as
-    Catalog._load_manifest); the checkpoint is a read optimization.
-    Entries are stored in DELTA form (add/remove vs the predecessor —
-    see Catalog._commit); replay them to the per-version full ``files``
-    view this source plans from, honoring legacy full-``files`` entries
-    as snapshot resets (same replay rule as Catalog._replay — duplicated
-    here because this module runs inside Spark's Python data-source
-    worker with no Catalog instance)."""
-    entries: list[dict] = []
-    mpath = os.path.join(meta_dir, "manifest.json")
-    if os.path.isfile(mpath):
-        with open(mpath) as f:
-            entries = json.load(f)
-    cdir = os.path.join(meta_dir, "commits")
-    if os.path.isdir(cdir):
-        known = {e["version"] for e in entries}
-        for fn in sorted(os.listdir(cdir)):
-            if fn.endswith(".json"):
-                v = int(fn[: -len(".json")])
-                if v not in known:
-                    with open(os.path.join(cdir, fn)) as f:
-                        entries.append(json.load(f))
-        entries.sort(key=lambda e: e["version"])
-    out: list[dict] = []
-    running: set[str] = set()
-    for raw in entries:
-        e = dict(raw)
-        if "files" in e:
-            running = set(e["files"])
-        else:
-            running = (running | set(e.pop("add", ()))) - set(
-                e.pop("remove", ())
-            )
-            e["files"] = sorted(running)
-        out.append(e)
-    return out
+def _load_manifest(root: str, table: str) -> list[dict]:
+    """Every retained version of ``table`` with its full ``files`` list:
+    the catalog's own log read and replay (the view time travel uses).
+    Reading the log needs no Spark session, which Spark's Python
+    data-source worker does not have."""
+    from ..pipeline.catalog import Catalog
+
+    return Catalog(None, root)._load_manifest(table, full=True)
 
 
 class CatalogChangesDataSource(DataSource):
@@ -120,8 +90,8 @@ class _ChangesStreamReader(DataSourceStreamReader):
             raise ValueError(
                 "catalog_changes requires 'warehouse' and 'table' options"
             )
+        self._root, self._table = root, table
         self._table_path = os.path.join(root, *table.split("."))
-        self._meta_dir = os.path.join(root, "_meta", *table.split("."))
         self._trash_dir = os.path.join(root, "_trash", *table.split("."))
         self._start = int(options.get("startingVersion", "0"))
         self._skip_changes = (
@@ -139,7 +109,7 @@ class _ChangesStreamReader(DataSourceStreamReader):
         return {"version": self._start}
 
     def latestOffset(self) -> dict:
-        entries = _load_manifest(self._meta_dir)
+        entries = _load_manifest(self._root, self._table)
         head = entries[-1]["version"] if entries else 0
         head = max(head, self._start)
         if self._max_versions > 0:
@@ -158,7 +128,7 @@ class _ChangesStreamReader(DataSourceStreamReader):
         # offset arrives here, not via initialOffset — learn it so
         # latestOffset never proposes an end below a committed start.
         self._committed = max(self._committed, start["version"])
-        entries = _load_manifest(self._meta_dir)
+        entries = _load_manifest(self._root, self._table)
         by_version = {e["version"]: e for e in entries}
         parts: list[_FilePartition] = []
         for v in range(start["version"] + 1, end["version"] + 1):
