@@ -62,6 +62,45 @@ def _sql_str(path: str) -> str:
     return path.replace("\\", "\\\\").replace("'", "\\'")
 
 
+def _ident(name: str) -> str:
+    """``name`` as a backquoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(dt: T.DataType) -> str:
+    """``dt`` as a Spark SQL type name (nested field names backquoted)."""
+    if isinstance(dt, T.StructType):
+        fields = (f"{_ident(f.name)}: {_sql_type(f.dataType)}" for f in dt)
+        return f"STRUCT<{', '.join(fields)}>"
+    if isinstance(dt, T.ArrayType):
+        return f"ARRAY<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"MAP<{_sql_type(dt.keyType)}, {_sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def _select(df: DataFrame, exprs: list[str]) -> DataFrame:
+    """``df.selectExpr(*exprs)`` in a fixed number of Py4J round trips,
+    whatever the number of columns: building a ``Column`` per field costs
+    several round trips each, and even a list of strings travels to the JVM
+    one element per round trip. So the expressions go as one struct,
+    unpacked by name; the optimizer folds the struct away, leaving the
+    plain projection."""
+    return df.selectExpr(f"struct({', '.join(exprs)}) AS __cols").select(
+        "__cols.*"
+    )
+
+
+def _logical_cols(spec: "TableSpec") -> list[str]:
+    """SQL text projecting a frame of physical file columns to the declared
+    logical names, order and types (Delta column mapping)."""
+    return [
+        f"CAST({_ident(spec.physical(f.name))} AS {_sql_type(f.dataType)})"
+        f" AS {_ident(f.name)}"
+        for f in spec.schema.fields
+    ]
+
+
 def _layout_sig(rel: str) -> tuple[str, ...]:
     """Partition-layout signature of a data file: the ordered col names of
     its ``col=value`` directory segments (empty = unpartitioned layout).
@@ -314,11 +353,7 @@ class Catalog:
         # Partition columns come back typed by directory inference; project
         # to the declared column order and types (physical file names map
         # back to logical declared names — Delta column mapping).
-        cols = [
-            df[spec.physical(f.name)].cast(f.dataType).alias(f.name)
-            for f in spec.schema.fields
-        ]
-        return df.select(*cols)
+        return _select(df, _logical_cols(spec))
 
     # --- deletion vectors (merge-on-read DELETE) -------------------------
 
@@ -1349,13 +1384,12 @@ class Catalog:
         """Project a LOGICAL frame to the physical file columns (declared
         order, mapped names) — every data-file write funnels through this,
         so files always store physical names (Delta column mapping)."""
-        from pyspark.sql import functions as F
-
-        return df.select(
-            *[
-                F.col(f.name).alias(spec.physical(f.name))
+        return _select(
+            df,
+            [
+                f"{_ident(f.name)} AS {_ident(spec.physical(f.name))}"
                 for f in spec.schema.fields
-            ]
+            ],
         )
 
     def _apply_identity(
@@ -1783,23 +1817,20 @@ class Catalog:
             if sig:
                 reader = reader.option("basePath", root)
             df = reader.load([os.path.join(root, r) for r in rels])
-            cols = [
-                df[spec.physical(f.name)].cast(f.dataType).alias(f.name)
-                for f in spec.schema.fields
-            ]
+            cols = _logical_cols(spec)
             abs_root = os.path.abspath(root)
             rel_expr = (
                 "substring_index(_metadata.file_path, "
                 f"'{_sql_str(abs_root)}/', -1)"
             )
             if dvs:
-                cols = cols + [
-                    F.expr(rel_expr).alias("__dv_file"),
-                    F.col("_metadata.row_index").alias("__dv_idx"),
+                cols += [
+                    f"{rel_expr} AS __dv_file",
+                    "_metadata.row_index AS __dv_idx",
                 ]
             if with_file_col:
-                cols = cols + [F.expr(rel_expr).alias(with_file_col)]
-            parts.append(df.select(*cols))
+                cols.append(f"{rel_expr} AS {_ident(with_file_col)}")
+            parts.append(_select(df, cols))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -117,8 +117,18 @@ def bronze_stage(
         new_rows = idempotent_new_rows(batch, existing, ["_id"]).cache()
 
         def _mark_loaded() -> None:
-            ctrl_row = spark.createDataFrame(
-                [(DATASET, ingestion_date, clock)], LOAD_CONTROL_SCHEMA
+            # An inline table, not createDataFrame: a frame of local
+            # Python rows runs its tasks in Python workers, which cost
+            # about 1 CPU-s a date (4 vCPU) for this one row, and values
+            # bound as parameters keep the plan (and its generated code)
+            # the same from date to date.
+            ctrl_row = spark.sql(
+                "SELECT * FROM VALUES (:dataset, CAST(:day AS DATE),"
+                " CAST(:clock AS TIMESTAMP))"
+                " AS t(dataset, ingestion_date, loaded_ts)",
+                args={
+                    "dataset": DATASET, "day": ingestion_date, "clock": clock
+                },
             )
             catalog.append("core.load_control", ctrl_row)
 

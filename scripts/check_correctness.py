@@ -10,7 +10,10 @@ When run over the FULL registry (no query filter), the per-query results
 are also written to ``CORRECTNESS_local.json`` at the repo root in the
 driver's row format, so the builder-side gate is a committed, auditable
 artifact covering every registered query — including the ones outside
-the driver's 50-entry per-round window.
+the driver's 50-entry per-round window. Keys starting with ``_`` are
+reserved for artifact metadata, not queries: ``_fingerprints`` holds each
+query's implementation fingerprint at gate time. A reader iterating the
+query rows must skip them.
 """
 
 from __future__ import annotations

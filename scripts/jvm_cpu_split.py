@@ -1,10 +1,14 @@
-"""Where a corpus pass's CPU goes inside the JVM, query by query.
+"""Where a corpus pass's or a daily date's CPU goes inside the JVM.
 
-Runs the ``corpus_prep`` queries (``perfbench.metrics.CORPUS_QUERIES``) on
-one Spark session for several passes, each query written whole into the
-``noop`` sink like the benchmark does. For every query it prints the wall
-time and the CPU seconds per pass, the CPU split by JVM thread kind as
-read from ``/proc/<jvm>/task/*/stat``:
+Corpus mode (the default) runs the ``corpus_prep`` queries
+(``perfbench.metrics.CORPUS_QUERIES``) on one Spark session for several
+passes, each query written whole into the ``noop`` sink like the benchmark
+does. Daily mode (``--daily N``) runs ingestion dates 0 to N-1 of the
+``daily_etl`` feed (``perfbench.gen.PetsFeed``, same sizes and seed) through
+``build_daily_pipeline(...).run()`` on a temporary warehouse, one
+``run()`` per date. For every query or date it prints the wall time and
+the CPU seconds, the CPU split by JVM thread kind as read from
+``/proc/<jvm>/task/*/stat``:
 
 - ``exec``: executor task threads (the query's own work);
 - ``jit``: the C1/C2 compiler threads (HotSpot JIT);
@@ -15,17 +19,29 @@ read from ``/proc/<jvm>/task/*/stat``:
   of threads that ended during the query (``/proc`` forgets them);
 - ``python``: this process and the JVM's Python workers.
 
-It also prints the Janino compiles of each pass (Spark's
-``CodegenMetrics`` compilation count): a pass that recompiles classes it
-compiled in the previous one has outgrown the codegen cache
-(``spark.sql.codegen.cache.maxEntries``).
+and the Py4J round trips from Python into the JVM (:class:`Py4JCounter`):
+
+- ``py4j``: calls made by the program (every PySpark API call, plan
+  construction, conf reads, actions);
+- ``rel``: releases, sent by Py4J's finalizer thread when Python drops a
+  reference to a JVM object. They are sent asynchronously, so a release
+  may be booked to the query or date after the one that dropped it.
+
+It also prints the Janino compiles (Spark's ``CodegenMetrics``
+compilation count) of each corpus pass, or of each date: a corpus pass
+that recompiles classes it compiled in the previous one has outgrown the
+codegen cache (``spark.sql.codegen.cache.maxEntries``).
 
 Usage::
 
     python scripts/jvm_cpu_split.py [--passes 4] [--sf-dir DIR] [query ...]
+    python scripts/jvm_cpu_split.py --daily 8 [--seed 1]
 
-Pass 1 warms up (the JIT, the codegen cache); the table covers the later
-passes. Linux only. Run it on an otherwise idle machine: other work
+Corpus pass 1 warms up (the JIT, the codegen cache); the table covers the
+later passes. In daily mode date 0 creates the tables and loads the first
+(larger) drop, date 1 is the feed's empty date and date 2 the first
+ordinary one; the median row covers dates 3 on, so ``--daily`` needs at
+least 4. Linux only. Run it on an otherwise idle machine: other work
 stretches the wall times and slows the JIT and GC threads.
 """
 
@@ -33,14 +49,19 @@ from __future__ import annotations
 
 import argparse
 import os
+import shutil
 import statistics
 import sys
+import tempfile
+import threading
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 KINDS = ("exec", "jit", "gc", "driver", "other", "python")
+COUNTS = ("py4j", "rel")
+FIRST_STEADY_DATE = 3
 
 
 def thread_kind(comm: str) -> str:
@@ -109,10 +130,136 @@ def delta(after: tuple, before: tuple) -> dict[str, float]:
     return d
 
 
+class Py4JCounter:
+    """Counts the Py4J round trips from this process into ``spark``'s JVM
+    while active, by wrapping its gateway client's ``send_command``:
+    ``calls`` made by the program, and ``releases`` sent by Py4J's
+    finalizer thread for JVM objects Python no longer references.
+
+    Usage: ``with Py4JCounter(spark) as n: ...``, then ``n.calls``."""
+
+    def __init__(self, spark) -> None:
+        self.client = spark.sparkContext._gateway._gateway_client
+        self.calls = 0
+        self.releases = 0
+        self._lock = threading.Lock()
+
+    def __enter__(self) -> "Py4JCounter":
+        from py4j.clientserver import FinalizerWorker
+
+        self._send = send = self.client.send_command
+
+        def counted(*args, **kwargs):
+            released = isinstance(threading.current_thread(), FinalizerWorker)
+            with self._lock:
+                if released:
+                    self.releases += 1
+                else:
+                    self.calls += 1
+            return send(*args, **kwargs)
+
+        self.client.send_command = counted
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.client.send_command = self._send
+
+
 def compiles(spark) -> int:
     """Janino compilations in this JVM so far."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
     return int(metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def measure(spark, jvm_pid: int, fn) -> dict[str, float]:
+    """Run ``fn()`` and return what it cost: wall, CPU by thread kind (see
+    :func:`delta`), Py4J round trips and Janino compiles."""
+    c0 = compiles(spark)
+    before, t0 = sample(jvm_pid), time.perf_counter()
+    with Py4JCounter(spark) as n:
+        fn()
+    d = delta(sample(jvm_pid), before)
+    d["wall"] = time.perf_counter() - t0
+    d["py4j"], d["rel"] = n.calls, n.releases
+    d["janino"] = compiles(spark) - c0
+    return d
+
+
+def print_row(label: str, d: dict[str, float], cols: tuple[str, ...]) -> None:
+    print(f"{label:<26}" + "".join(
+        f"{d[c]:>8.0f}" if c in COUNTS + ("janino",) else f"{d[c]:>8.2f}"
+        for c in cols))
+
+
+def corpus(spark, jvm_pid: int, args) -> None:
+    from certified_dogs_and_cats_spark.cache import release_cached
+    from certified_dogs_and_cats_spark.queries import QUERIES
+
+    def run(q: str) -> None:
+        QUERIES[q](spark, args.sf_dir).write.format("noop").mode(
+            "overwrite").save()
+        release_cached()
+
+    split: dict[str, list[dict[str, float]]] = {q: [] for q in args.queries}
+    per_pass = []
+    for p in range(args.passes):
+        c0 = compiles(spark)
+        for q in args.queries:
+            d = measure(spark, jvm_pid, lambda: run(q))
+            if p:
+                split[q].append(d)
+        per_pass.append(compiles(spark) - c0)
+
+    print(f"# {args.sf_dir}: per pass, median of passes 2-{args.passes}")
+    cols = ("wall", "total") + KINDS + COUNTS
+    print(f"{'query':<26}" + "".join(f"{c:>8}" for c in cols))
+    sums = dict.fromkeys(cols, 0.0)
+    for q in args.queries:
+        med = {c: statistics.median(d[c] for d in split[q]) for c in cols}
+        for c in cols:
+            sums[c] += med[c]
+        print_row(q, med, cols)
+    print_row("(sum)", sums, cols)
+    print("janino compiles per pass: " + ", ".join(map(str, per_pass)))
+
+
+def daily(spark, jvm_pid: int, args) -> None:
+    from datetime import datetime, time as dtime
+
+    from perfbench.etl import FIRST_ROWS, ROWS_PER_DAY
+    from perfbench.gen import PetsFeed, normalize_key, write_drop
+
+    from certified_dogs_and_cats_spark.pipeline import (
+        Catalog, build_daily_pipeline,
+    )
+    from certified_dogs_and_cats_spark.pipeline.refdata import seed_rows
+
+    root = tempfile.mkdtemp(prefix="jvm_cpu_split_")
+    try:
+        raw = os.path.join(root, "raw", "licensed_pets")
+        catalog = Catalog(spark, os.path.join(root, "warehouse"))
+        keys = {normalize_key(v) for v, _ in seed_rows()}
+        feed = PetsFeed(args.seed, ROWS_PER_DAY, keys, first_rows=FIRST_ROWS)
+        dates = []
+        for i in range(args.daily):
+            drop = feed.drop(i)
+            write_drop(raw, drop)
+            pipe = build_daily_pipeline(
+                catalog, raw, clock=datetime.combine(drop.day, dtime(6)))
+            dates.append((f"{i} {drop.day}", measure(
+                spark, jvm_pid, lambda: pipe.run(ingestion_date=drop.day))))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+    print(f"# daily_etl feed, seed {args.seed}: one run() per date")
+    cols = ("wall", "total") + KINDS + COUNTS + ("janino",)
+    print(f"{'date':<26}" + "".join(f"{c:>8}" for c in cols))
+    for label, d in dates:
+        print_row(label, d, cols)
+    steady = [d for _, d in dates[FIRST_STEADY_DATE:]]
+    print_row(f"(median, dates {FIRST_STEADY_DATE}+)",
+              {c: statistics.median(d[c] for d in steady) for c in cols},
+              cols)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -123,49 +270,28 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--sf-dir", default=os.path.join(REPO, "perfbench", "data", "sf0.1")
     )
+    ap.add_argument("--daily", type=int, metavar="N",
+                    help="run daily dates 0..N-1 instead of the corpus")
+    ap.add_argument("--seed", type=int, default=1,
+                    help="daily feed seed (with --daily)")
     ap.add_argument("queries", nargs="*", default=list(CORPUS_QUERIES))
     args = ap.parse_args(argv)
-    if args.passes < 2:
+    if args.daily is not None and args.daily <= FIRST_STEADY_DATE:
+        ap.error(f"--daily must be at least {FIRST_STEADY_DATE + 1}")
+    if args.daily is None and args.passes < 2:
         ap.error("--passes must be at least 2 (pass 1 only warms up)")
 
-    from certified_dogs_and_cats_spark.cache import release_cached
-    from certified_dogs_and_cats_spark.queries import QUERIES
     from certified_dogs_and_cats_spark.session import get_spark
 
     cpus = len(os.sched_getaffinity(0))
     spark = get_spark("jvm_cpu_split", cpus=cpus)
     jvm_pid = spark.sparkContext._gateway.proc.pid
-    version = spark.version
-    split: dict[str, list[dict[str, float]]] = {q: [] for q in args.queries}
-    per_pass = []
+    print(f"# {cpus} CPUs, Spark {spark.version}; seconds, except the "
+          "counts (py4j, rel, janino)")
     try:
-        for p in range(args.passes):
-            c0 = compiles(spark)
-            for q in args.queries:
-                before, t0 = sample(jvm_pid), time.perf_counter()
-                df = QUERIES[q](spark, args.sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                release_cached()
-                if p:
-                    d = delta(sample(jvm_pid), before)
-                    d["wall"] = time.perf_counter() - t0
-                    split[q].append(d)
-            per_pass.append(compiles(spark) - c0)
+        (daily if args.daily is not None else corpus)(spark, jvm_pid, args)
     finally:
         spark.stop()
-
-    print(f"# {cpus} CPUs, Spark {version}, {args.sf_dir}: seconds per "
-          f"pass, median of passes 2-{args.passes}")
-    cols = ("wall", "total") + KINDS
-    print(f"{'query':<26}" + "".join(f"{c:>8}" for c in cols))
-    sums = dict.fromkeys(cols, 0.0)
-    for q in args.queries:
-        med = {c: statistics.median(d[c] for d in split[q]) for c in cols}
-        for c in cols:
-            sums[c] += med[c]
-        print(f"{q:<26}" + "".join(f"{med[c]:>8.2f}" for c in cols))
-    print(f"{'(sum)':<26}" + "".join(f"{sums[c]:>8.2f}" for c in cols))
-    print("janino compiles per pass: " + ", ".join(map(str, per_pass)))
     return 0
 
 

@@ -37,6 +37,7 @@ Usage: python scripts/lakehouse_stress.py > LAKEHOUSE_STRESS.md
 from __future__ import annotations
 
 import os
+import random
 import shutil
 import sys
 import tempfile
@@ -73,6 +74,8 @@ CHECKPOINT_INTERVAL = 25
 DELETE_EVERY = 3  # every 3rd batch per writer is followed by a self-delete
 UPDATE_EVERY = 4  # every 4th batch per writer is followed by a self-update
 RETRY_LIMIT = 20
+BACKOFF_S = 0.1  # first retry waits up to this; the cap doubles per retry
+BACKOFF_CAP_S = 8.0
 
 T_NAME = "stress.t"
 MV_NAME = "stress.mv"
@@ -103,17 +106,33 @@ class Ledger:
 
 def _retrying(ledger: Ledger, fn):
     """Run a DML op, retrying on OCC rewrite conflicts (appends rebase
-    internally; DV delete/update commits can lose the version race)."""
-    for _ in range(RETRY_LIMIT):
+    internally; DV delete/update commits can lose the version race).
+    Each retry first sleeps a random time up to a cap that doubles per
+    retry ("full jitter"): a row-level op conflicts with every commit
+    that lands while it computes, so with a short fixed sleep a writer
+    racing three busy appenders lost every attempt and died."""
+    for attempt in range(RETRY_LIMIT):
         try:
             return fn()
         except ConcurrentWriteConflict:
             ledger.add(retries=1)
-            time.sleep(0.05)
+            cap = min(BACKOFF_CAP_S, BACKOFF_S * 2**attempt)
+            time.sleep(random.uniform(0, cap))
     raise RuntimeError("OCC retry budget exhausted — livelock, not a race")
 
 
-def writer_task(spark, cat: Catalog, wid: int, ledger: Ledger) -> None:
+def writer_task(
+    spark, cat: Catalog, wid: int, ledger: Ledger, errors: dict
+) -> None:
+    """Run writer ``wid``'s batches; the exception that stops it, if any,
+    lands in ``errors[wid]`` and fails the report."""
+    try:
+        _write_batches(spark, cat, wid, ledger)
+    except Exception as e:
+        errors[wid] = e
+
+
+def _write_batches(spark, cat: Catalog, wid: int, ledger: Ledger) -> None:
     base = wid * 1_000_000
     for b in range(BATCHES_PER_WRITER):
         lo = base + b * ROWS_PER_BATCH
@@ -206,12 +225,13 @@ def main() -> None:
         # --- phase 2: DML storm with OCC writers + racing reader ------
         stop = threading.Event()
         reader_out: dict = {}
+        errors: dict = {}
         reader = threading.Thread(
             target=reader_task, args=(cat, stop, reader_out)
         )
         threads = [
             threading.Thread(
-                target=writer_task, args=(spark, cat, w, ledger)
+                target=writer_task, args=(spark, cat, w, ledger, errors)
             )
             for w in range(N_WRITERS)
         ]
@@ -228,8 +248,14 @@ def main() -> None:
         storm_s = time.perf_counter() - t0
 
         head_v = cat.current_version(T_NAME)
-        expected_commits = ledger.commits + 1  # + the MV's cursor acks? no:
-        # MV refresh doesn't commit to stress.t; head = seed + storm DMLs.
+        check(
+            "every writer finished its batches",
+            not errors,
+            f"{N_WRITERS - len(errors)}/{N_WRITERS} writers finished "
+            f"{BATCHES_PER_WRITER} batches"
+            + "".join(f"; writer {w}: {e!r}" for w, e in errors.items()),
+        )
+        # The MV refresh doesn't commit to stress.t: head = seed + storm.
         check(
             "version count == successful commits",
             head_v == ledger.commits,
@@ -249,10 +275,15 @@ def main() -> None:
             f"{reader_out.get('head_reads', 0)} head reads during storm",
         )
         metrics.append(("storm wall (s)", f"{storm_s:.1f}"))
+        planned = N_WRITERS * (
+            BATCHES_PER_WRITER
+            + BATCHES_PER_WRITER // DELETE_EVERY
+            + BATCHES_PER_WRITER // UPDATE_EVERY
+        )
         metrics.append(
             (
-                "storm commits / OCC retries",
-                f"{ledger.commits} / {ledger.retries}",
+                "storm commits (planned) / OCC retries",
+                f"{ledger.commits - 1} ({planned}) / {ledger.retries}",
             )
         )
         metrics.append(

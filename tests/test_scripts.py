@@ -68,3 +68,26 @@ def test_audit_roster_has_no_ghost_exclusions():
 
     assert set(EXCLUDED) <= set(QUERIES)
     assert set(auditable(QUERIES)) | set(EXCLUDED) == set(QUERIES)
+
+
+def test_stress_reports_a_writer_that_exhausts_its_retries(monkeypatch):
+    """lakehouse_stress: a writer that loses every OCC race stops after
+    RETRY_LIMIT attempts, and its error is kept for the report's "every
+    writer finished its batches" check instead of dying with the thread."""
+    m = _load("lakehouse_stress.py")
+    monkeypatch.setattr(m.time, "sleep", lambda s: None)
+
+    class AlwaysConflicts:
+        def createDataFrame(self, rows, schema):
+            return self
+
+        def coalesce(self, n):
+            return self
+
+        def append(self, name, df):
+            raise m.ConcurrentWriteConflict(name)
+
+    stub, ledger, errors = AlwaysConflicts(), m.Ledger(), {}
+    m.writer_task(stub, stub, 3, ledger, errors)
+    assert isinstance(errors[3], RuntimeError)
+    assert ledger.retries == m.RETRY_LIMIT and ledger.commits == 0

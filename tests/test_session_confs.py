@@ -58,3 +58,13 @@ def test_generated_classes_are_reused_after_many_other_plans(spark):
     before = compiles.getCount()
     run(0)
     assert compiles.getCount() - before == 0
+
+
+def test_dataframe_origin_capture_is_off(spark):
+    """get_spark turns off PySpark's DataFrame-origin capture: at Spark's
+    default every DataFrame and Column API call makes several extra Py4J
+    round trips to record its Python call site."""
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
+        == "false"
+    )
