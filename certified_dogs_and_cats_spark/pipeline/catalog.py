@@ -2062,26 +2062,36 @@ class Catalog:
                 f"cannot alter partition column {col!r}: the physical "
                 "directory layout is keyed on it"
             )
-        hit = [
-            c
-            for c, expr in spec.constraints.items()
-            if re.search(rf"(?<!\w){re.escape(col)}(?!\w)", expr)
-        ]
+
+        def names(expr: str) -> bool:
+            return re.search(rf"(?<!\w){re.escape(col)}(?!\w)", expr) is not None
+
+        hit = [c for c, expr in spec.constraints.items() if names(expr)]
         if hit:
             raise ValueError(
                 f"column {col!r} is referenced by constraint(s) {hit}; "
                 "drop them first"
             )
         gen_hit = [
-            g
-            for g, expr in spec.generated.items()
-            if g != col
-            and re.search(rf"(?<!\w){re.escape(col)}(?!\w)", expr)
+            g for g, expr in spec.generated.items() if g != col and names(expr)
         ]
         if gen_hit:
             raise ValueError(
                 f"column {col!r} is referenced by generated column(s) "
                 f"{gen_hit}; drop them first"
+            )
+        # Policies name columns in SQL text that a rename or drop would not
+        # rewrite: a mask left on the old name stops masking the column.
+        policies = [
+            *(f"mask on {c!r}" for c, e in spec.column_masks.items() if c == col or names(e)),
+            *(f"DEFAULT of {c!r}" for c, e in spec.defaults.items() if c == col or names(e)),
+            *(["row filter"] if spec.row_filter and names(spec.row_filter) else []),
+            *(["clustering key"] if col in spec.cluster_by else []),
+        ]
+        if policies:
+            raise ValueError(
+                f"column {col!r} is named by {', '.join(policies)}; "
+                "remove them first"
             )
 
     def rename_column(self, name: str, old: str, new: str) -> None:
@@ -2093,8 +2103,9 @@ class Catalog:
         100 TB a rename costs one commit instead of rewriting the
         fleet, and time travel keeps working because old files' physical
         names never change. Without the property it is the classic
-        copy-on-write rewrite. Partition, constraint-referenced, and
-        generated-expr-referenced columns refuse either way."""
+        copy-on-write rewrite. Partition, constraint-referenced,
+        generated-expr-referenced and policy-named columns (mask, DEFAULT,
+        row filter, clustering key) refuse either way."""
         from pyspark.sql import functions as F
 
         spec = self.tables[name]

@@ -60,10 +60,23 @@ def seed_rows() -> list[tuple[str, str]]:
 
 
 def build_seed(spark: SparkSession) -> DataFrame:
-    """VALUES-style seed -> normalized keys -> dedup via max(breed_standard)
-    per key (sql/breed_mapping.py:583-592)."""
-    raw = spark.createDataFrame(
-        seed_rows(), "breed_variant STRING, breed_standard STRING"
+    """VALUES seed -> normalized keys -> dedup via max(breed_standard)
+    per key (sql/breed_mapping.py:583-592).
+
+    The seed is an inline ``VALUES`` table with its strings bound as
+    parameters: a frame made from local Python rows (``createDataFrame``)
+    scans an RDD whose tasks run in Python workers."""
+    rows = seed_rows()
+    # Named, not positional: with 164 ``?`` markers Spark 4.1.2 bound the
+    # values to the wrong rows.
+    args = {}
+    for i, (variant, standard) in enumerate(rows):
+        args[f"v{i}"], args[f"s{i}"] = variant, standard
+    raw = spark.sql(
+        "SELECT * FROM VALUES "
+        + ", ".join(f"(:v{i}, :s{i})" for i in range(len(rows)))
+        + " AS t(breed_variant, breed_standard)",
+        args=args,
     )
     return (
         raw.select(

@@ -85,3 +85,22 @@ def test_upsert_counts_reported_only_after_commit(catalog, monkeypatch):
         for r in catalog.table("ref.breed_mapping").collect()
     }
     assert after == before  # nothing committed, nothing reported
+
+
+def test_seed_is_inline_values_with_the_same_rows(spark):
+    """The seed scans no RDD of Python rows (whose tasks would start Python
+    workers), and its rows equal those built from the local list."""
+    from certified_dogs_and_cats_spark.functions.scalar import normalize_key
+    from certified_dogs_and_cats_spark.pipeline.refdata import seed_rows
+
+    seed = build_seed(spark)
+    plan = seed._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    local = (
+        spark.createDataFrame(seed_rows(), "breed_variant STRING, breed_standard STRING")
+        .select(normalize_key("breed_variant").alias("breed_variant_key"), "breed_standard")
+        .filter(F.length("breed_variant_key") > 0)
+        .groupBy("breed_variant_key")
+        .agg(F.max("breed_standard").alias("breed_standard"))
+    )
+    assert sorted(seed.collect()) == sorted(local.collect())

@@ -31,6 +31,7 @@ def test_all_probe_scripts_import():
         "streaming_state_report.py",
         "record_fingerprints.py",
         "jvm_cpu_split.py",
+        "coldstart_probe.py",
     ):
         _load(name)
 

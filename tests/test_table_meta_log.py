@@ -122,13 +122,15 @@ def test_no_setter_writes_a_sidecar(catalog, spark):
     catalog.set_row_filter("t.sc", "k > 0")
     catalog.set_column_mask("t.sc", "v", "upper(v)")
     catalog.set_column_mask("t.sc", "v", None)
+    catalog.set_default("t.sc", "v", None)
+    catalog.set_clustering("t.sc", ())
     catalog.rename_column("t.sc", "v", "label")
     catalog.drop_column("t.sc", "label")
     catalog.add_column("t.sc", T.StructField("v", T.StringType()))
     meta_dir = catalog._meta_dir("t.sc")
     assert SIDECARS.isdisjoint(os.listdir(meta_dir))
     # Each setter committed a version, data or not.
-    assert catalog.current_version("t.sc") == 9
+    assert catalog.current_version("t.sc") == 11
     spec = Catalog(spark, catalog.root).register("t.sc", SCHEMA)
     assert spec.partition_by == ("p",)
     assert spec.column_map == {"v": "v_r1"}
@@ -168,3 +170,38 @@ def test_stream_log_grounds_at_the_checkpoint(spark, tmp_path):
     got = {e["version"]: e["files"] for e in _load_manifest(cat.root, "t.st")}
     head = cat._load_manifest("t.st")[-1]
     assert head["version"] == 3 and got[3] == head["files"]
+
+
+POLICIES = {
+    "mask": lambda c, t: c.set_column_mask(t, "v", "'***'"),
+    "default": lambda c, t: c.set_default(t, "v", "'d'"),
+    "row_filter": lambda c, t: c.set_row_filter(t, "v <> 'zz'"),
+    "clustering": lambda c, t: c.set_clustering(t, ("v",)),
+}
+
+
+@pytest.mark.parametrize("op", ["rename", "drop"])
+@pytest.mark.parametrize("mapped", [True, False], ids=["mapped", "cow"])
+@pytest.mark.parametrize("policy", sorted(POLICIES))
+def test_policy_named_column_refuses_rename_and_drop(catalog, spark, policy, mapped, op):
+    """A mask, DEFAULT, row filter or clustering key names its column in
+    text that a rename or drop would leave behind (a renamed masked column
+    read back unmasked); the change is refused and nothing moves."""
+    name = f"t.pol_{policy}_{int(mapped)}_{op}"
+    if mapped:
+        _mapped(catalog, name)
+    else:
+        catalog.register(name, SCHEMA)
+    catalog.append(name, spark.createDataFrame(ROWS, SCHEMA))
+    POLICIES[policy](catalog, name)
+    version = catalog.current_version(name)
+    with pytest.raises(ValueError, match="named by"):
+        if op == "rename":
+            catalog.rename_column(name, "v", "w")
+        else:
+            catalog.drop_column(name, "v")
+    assert [f.name for f in catalog.tables[name].schema.fields] == ["k", "v", "p"]
+    assert catalog.current_version(name) == version
+    if policy == "mask":
+        got = {r["v"] for r in catalog.governed_table(name).collect()}
+        assert got == {"***"}
