@@ -11,6 +11,11 @@ and analysed once in the JVM, rather than a tree of ``Column`` objects that
 costs one Py4J round trip per node; registering the stack is what every
 daily run pays, so its cost is the construction cost.
 
+A small Bronze or Silver table reads as one partition
+(``catalog.one_partition_if_small``), so no view needs a shuffle: each view
+and each parameterised read over one runs as one Spark job of one task,
+where each exchange would cost its own stage and job.
+
 Scale posture: every view pre-aggregates to (group, cnt) BEFORE windows or
 joins, so shuffles move grouped counts, never raw rows; share denominators
 use windowed sums over the aggregated frame instead of a second scan+join
@@ -175,10 +180,13 @@ def gold_quality(silver: DataFrame) -> DataFrame:
 
 
 def bronze_health(bronze: DataFrame) -> DataFrame:
-    """v_bronze_health (bronze.py:151-158): one-row global health metrics."""
+    """v_bronze_health (bronze.py:151-158): one-row global health metrics.
+    ``n_years`` counts a set rather than a second ``COUNT(DISTINCT)``: two
+    distinct aggregates make Spark plan an ``Expand``, whose output loses
+    the one-partition read and brings back two exchanges."""
     return _sql(bronze, """
         SELECT COUNT(1) AS row_cnt, COUNT(DISTINCT _id) AS distinct_ids,
-               COUNT(DISTINCT Year) AS n_years,
+               CAST(size(collect_set(Year)) AS BIGINT) AS n_years,
                SUM(CASE WHEN NOT FSA_VALID THEN 1 ELSE 0 END)
                    AS invalid_fsa_cnt,
                MAX(ingestion_ts) AS max_ingestion_ts

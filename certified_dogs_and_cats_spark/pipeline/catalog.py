@@ -47,6 +47,7 @@ import json
 import os
 import re
 import shutil
+import stat
 import time
 import urllib.parse
 from dataclasses import dataclass, field
@@ -109,6 +110,34 @@ def _layout_sig(rel: str) -> tuple[str, ...]:
     from .skipping import hive_partition_segments
 
     return tuple(col for col, _ in hive_partition_segments(rel))
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty frame of ``schema``, nullability included, planned as an
+    empty local relation (``LocalTableScan <empty>``).
+    ``createDataFrame([], schema)`` would scan a Python RDD, whose tasks
+    start Python workers, and hide the emptiness from
+    ``PropagateEmptyRelation``, which folds the joins above an empty
+    local relation."""
+    jspark = spark._jsparkSession
+    jdf = jspark.createDataFrame([], jspark.parseDataType(schema.json()))
+    return DataFrame(jdf, spark)
+
+
+def one_partition_if_small(df: DataFrame, nbytes: int) -> DataFrame:
+    """``df``, a read of files of ``nbytes`` bytes in all, as one partition
+    when those bytes fit one of Spark's file partitions
+    (``spark.sql.files.maxPartitionBytes``). ``Coalesce 1`` reports a
+    single partition, so the aggregates, windows and broadcast joins above
+    it plan no exchange: a small read runs as one job of one task, where
+    each exchange would cost its own stage and job for data that AQE then
+    coalesces back into one partition. The bound counts bytes only, not
+    Spark's per-file open cost, which would turn the rule off past about
+    31 files: a window over an aggregate of 1,100 tiny files (6.3 MB, 4
+    vCPU) took a median 18 CPU-s as one partition and 26 as Spark's
+    parallel scan."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return df.coalesce(1) if nbytes <= conf.filesMaxPartitionBytes() else df
 
 
 class ConstraintViolation(ValueError):
@@ -323,6 +352,12 @@ class Catalog:
         The declared schema is passed to the reader, so files written
         before a column was added (:meth:`add_column`) read back with
         nulls for it — parquet schema evolution without rewriting data.
+
+        A committed version whose files sum to at most
+        ``spark.sql.files.maxPartitionBytes`` reads as one partition, so
+        the aggregates and windows of a query over a small table run in
+        one job of one task, with no shuffle; a larger one reads with
+        Spark's parallel file scan.
         """
         spec = self.tables[name]
         if isinstance(version, str):
@@ -330,7 +365,7 @@ class Catalog:
         if version is not None:
             return self._read_version(spec, version)
         if not self.exists(name):
-            return self.spark.createDataFrame([], spec.schema)
+            return empty_frame(self.spark, spec.schema)
         manifest = self._load_manifest(name)
         if manifest:
             # Liveness is defined by the LOG, not by which files happen
@@ -1758,11 +1793,15 @@ class Catalog:
         ``version`` may be a single commit version or, for a batched
         multi-version read, the per-file ``{rel_path: version}`` map —
         so a vacuumed-file error names the commit that OWNS the missing
-        file, not whichever version the batch happened to end on."""
+        file, not whichever version the batch happened to end on.
+
+        Files that sum to at most ``spark.sql.files.maxPartitionBytes``
+        read as one partition (:func:`one_partition_if_small`), so the
+        query above them needs no shuffle."""
         from pyspark.sql import functions as F
 
         if not files:
-            out = self.spark.createDataFrame([], spec.schema)
+            out = empty_frame(self.spark, spec.schema)
             if with_file_col:
                 out = out.withColumn(with_file_col, F.lit(None).cast("string"))
             return out
@@ -1774,14 +1813,17 @@ class Catalog:
         stamps = []
         if os.path.isdir(trash):
             stamps = sorted(os.listdir(trash), reverse=True)
+        roots = [spec.path, *(os.path.join(trash, s) for s in stamps)]
         by_root: dict[str, list[str]] = {}
+        nbytes = 0
         for rel in files:
-            if os.path.isfile(os.path.join(spec.path, rel)):
-                by_root.setdefault(spec.path, []).append(rel)
-                continue
-            for stamp in stamps:
-                root = os.path.join(trash, stamp)
-                if os.path.isfile(os.path.join(root, rel)):
+            for root in roots:
+                try:
+                    st = os.stat(os.path.join(root, rel))
+                except OSError:
+                    continue
+                if stat.S_ISREG(st.st_mode):
+                    nbytes += st.st_size
                     by_root.setdefault(root, []).append(rel)
                     break
             else:
@@ -1848,7 +1890,7 @@ class Catalog:
                 ["__dv_file", "__dv_idx"],
                 "left_anti",
             ).drop("__dv_file", "__dv_idx")
-        return out
+        return one_partition_if_small(out, nbytes)
 
     def changes(
         self, name: str, from_version: int, to_version: int | None = None
@@ -1977,7 +2019,7 @@ class Catalog:
                 prev = (
                     self.table(name, version=v - 1)
                     if v > 1
-                    else self.spark.createDataFrame([], spec.schema)
+                    else empty_frame(self.spark, spec.schema)
                 )
                 # Rewrites may have changed the declared schema (rename/
                 # drop column); diff on the CURRENT declared columns.
@@ -1999,7 +2041,7 @@ class Catalog:
                 )
                 v += 1
         if not parts:
-            return self.spark.createDataFrame([], typed)
+            return empty_frame(self.spark, typed)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
@@ -2623,7 +2665,7 @@ class Catalog:
         the declared schema at declare time, not first-read time."""
         spec = self.tables[name]
         if expr is not None:
-            empty = self.spark.createDataFrame([], spec.schema)
+            empty = empty_frame(self.spark, spec.schema)
             try:
                 empty.filter(expr).schema
             except Exception as e:
@@ -2650,7 +2692,7 @@ class Catalog:
         else:
             from pyspark.sql import functions as F
 
-            empty = self.spark.createDataFrame([], spec.schema)
+            empty = empty_frame(self.spark, spec.schema)
             try:
                 empty.select(
                     F.expr(expr).cast(declared[col]).alias(col)
@@ -3391,7 +3433,7 @@ class Catalog:
             )
         ]
         if not kept:
-            return self.spark.createDataFrame([], spec.schema)
+            return empty_frame(self.spark, spec.schema)
         df = self._resolve_and_read(
             spec, kept, head["version"], dvs=head.get("dv", [])
         )

@@ -61,7 +61,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .catalog import Catalog
+from .catalog import Catalog, empty_frame
 
 _TYPE_MAP = {
     "INT": T.IntegerType(),
@@ -297,7 +297,7 @@ class DdlSession:
                 raise DdlError(f"table not found: {name}")
             spec = self.catalog.tables[name]
             self.catalog.overwrite(
-                name, self.catalog.spark.createDataFrame([], spec.schema)
+                name, empty_frame(self.catalog.spark, spec.schema)
             )
             return None
         if u.startswith("USE CATALOG "):

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import pattern_valid
-from .catalog import Catalog
+from .catalog import Catalog, one_partition_if_small
 from .expectations import is_empty, run_guards
 from .schemas import (
     ANIMAL_TYPES,
@@ -95,19 +95,23 @@ def bronze_stage(
         return StageResult("skipped_already_loaded")
 
     drop_dir = os.path.join(raw_root, f"ingestion_date={ingestion_date.isoformat()}")
-    if not os.path.isdir(drop_dir) or not any(
-        f.endswith(".csv") for f in os.listdir(drop_dir)
-    ):
+    csvs = [
+        os.path.join(drop_dir, f)
+        for f in (os.listdir(drop_dir) if os.path.isdir(drop_dir) else ())
+        if f.endswith(".csv")
+    ]
+    if not csvs:
         return StageResult("skipped_no_files")
 
-    raw = (
+    raw = one_partition_if_small(
         spark.read.schema(RAW_SCHEMA)
         .option("header", True)
         # Only .csv files: the presence gate above checks for them, so a
         # stray notes.txt/json in the drop must not be parsed as CSV
         # (its lines would fail the schema and trip the NULL-_id guard).
         .option("pathGlobFilter", "*.csv")
-        .csv(drop_dir)
+        .csv(drop_dir),
+        sum(os.path.getsize(p) for p in csvs),
     )
     batch = standardize(raw, ingestion_date, clock).cache()
     try:

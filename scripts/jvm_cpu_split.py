@@ -6,8 +6,10 @@ passes, each query written whole into the ``noop`` sink like the benchmark
 does. Daily mode (``--daily N``) runs ingestion dates 0 to N-1 of the
 ``daily_etl`` feed (``perfbench.gen.PetsFeed``, same sizes and seed) through
 ``build_daily_pipeline(...).run()`` on a temporary warehouse, one
-``run()`` per date. For every query or date it prints the wall time and
-the CPU seconds, the CPU split by JVM thread kind as read from
+``run()`` per date, each followed by a dashboard refresh that reads the
+10 gold views (``perfbench.metrics.GOLD_VIEWS``) whole, as the benchmark's
+dashboard does. For every query, date or refresh it prints the wall time
+and the CPU seconds, the CPU split by JVM thread kind as read from
 ``/proc/<jvm>/task/*/stat``:
 
 - ``exec``: executor task threads (the query's own work);
@@ -25,7 +27,9 @@ and the Py4J round trips from Python into the JVM (:class:`Py4JCounter`):
   construction, conf reads, actions);
 - ``rel``: releases, sent by Py4J's finalizer thread when Python drops a
   reference to a JVM object. They are sent asynchronously, so a release
-  may be booked to the query or date after the one that dropped it.
+  may be booked to the query or date after the one that dropped it;
+
+and the Spark jobs it ran (``jobs``).
 
 It also prints the Janino compiles (Spark's ``CodegenMetrics``
 compilation count) of each corpus pass, or of each date: a corpus pass
@@ -60,7 +64,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 KINDS = ("exec", "jit", "gc", "driver", "other", "python")
-COUNTS = ("py4j", "rel")
+COUNTS = ("py4j", "rel", "jobs")
 FIRST_STEADY_DATE = 3
 
 
@@ -173,14 +177,21 @@ def compiles(spark) -> int:
 
 def measure(spark, jvm_pid: int, fn) -> dict[str, float]:
     """Run ``fn()`` and return what it cost: wall, CPU by thread kind (see
-    :func:`delta`), Py4J round trips and Janino compiles."""
+    :func:`delta`), Py4J round trips, Spark jobs and Janino compiles."""
+    sc = spark.sparkContext
+    group = f"jvm_cpu_split-{time.monotonic_ns()}"
     c0 = compiles(spark)
-    before, t0 = sample(jvm_pid), time.perf_counter()
-    with Py4JCounter(spark) as n:
-        fn()
-    d = delta(sample(jvm_pid), before)
-    d["wall"] = time.perf_counter() - t0
+    sc.setJobGroup(group, group)
+    try:
+        before, t0 = sample(jvm_pid), time.perf_counter()
+        with Py4JCounter(spark) as n:
+            fn()
+        d = delta(sample(jvm_pid), before)
+        d["wall"] = time.perf_counter() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     d["py4j"], d["rel"] = n.calls, n.releases
+    d["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
     d["janino"] = compiles(spark) - c0
     return d
 
@@ -228,6 +239,7 @@ def daily(spark, jvm_pid: int, args) -> None:
 
     from perfbench.etl import FIRST_ROWS, ROWS_PER_DAY
     from perfbench.gen import PetsFeed, normalize_key, write_drop
+    from perfbench.metrics import GOLD_VIEWS
 
     from certified_dogs_and_cats_spark.pipeline import (
         Catalog, build_daily_pipeline,
@@ -240,26 +252,35 @@ def daily(spark, jvm_pid: int, args) -> None:
         catalog = Catalog(spark, os.path.join(root, "warehouse"))
         keys = {normalize_key(v) for v, _ in seed_rows()}
         feed = PetsFeed(args.seed, ROWS_PER_DAY, keys, first_rows=FIRST_ROWS)
-        dates = []
+        def dashboard() -> None:
+            for v in GOLD_VIEWS:
+                spark.table(f"pets_gold_{v}").collect()
+
+        dates, reads = [], []
         for i in range(args.daily):
             drop = feed.drop(i)
             write_drop(raw, drop)
             pipe = build_daily_pipeline(
                 catalog, raw, clock=datetime.combine(drop.day, dtime(6)))
-            dates.append((f"{i} {drop.day}", measure(
+            label = f"{i} {drop.day}"
+            dates.append((label, measure(
                 spark, jvm_pid, lambda: pipe.run(ingestion_date=drop.day))))
+            reads.append((label, measure(spark, jvm_pid, dashboard)))
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
-    print(f"# daily_etl feed, seed {args.seed}: one run() per date")
     cols = ("wall", "total") + KINDS + COUNTS + ("janino",)
-    print(f"{'date':<26}" + "".join(f"{c:>8}" for c in cols))
-    for label, d in dates:
-        print_row(label, d, cols)
-    steady = [d for _, d in dates[FIRST_STEADY_DATE:]]
-    print_row(f"(median, dates {FIRST_STEADY_DATE}+)",
-              {c: statistics.median(d[c] for d in steady) for c in cols},
-              cols)
+    for title, rows in (("one run() per date", dates),
+                        (f"dashboard refresh, {len(GOLD_VIEWS)} views read"
+                         " whole, after each date's run()", reads)):
+        print(f"# daily_etl feed, seed {args.seed}: {title}")
+        print(f"{'date':<26}" + "".join(f"{c:>8}" for c in cols))
+        for label, d in rows:
+            print_row(label, d, cols)
+        steady = [d for _, d in rows[FIRST_STEADY_DATE:]]
+        print_row(f"(median, dates {FIRST_STEADY_DATE}+)",
+                  {c: statistics.median(d[c] for d in steady) for c in cols},
+                  cols)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -287,7 +308,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("jvm_cpu_split", cpus=cpus)
     jvm_pid = spark.sparkContext._gateway.proc.pid
     print(f"# {cpus} CPUs, Spark {spark.version}; seconds, except the "
-          "counts (py4j, rel, janino)")
+          "counts (py4j, rel, jobs, janino)")
     try:
         (daily if args.daily is not None else corpus)(spark, jvm_pid, args)
     finally:
