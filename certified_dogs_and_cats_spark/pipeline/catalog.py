@@ -126,18 +126,43 @@ def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
 
 def one_partition_if_small(df: DataFrame, nbytes: int) -> DataFrame:
     """``df``, a read of files of ``nbytes`` bytes in all, as one partition
-    when those bytes fit one of Spark's file partitions
-    (``spark.sql.files.maxPartitionBytes``). ``Coalesce 1`` reports a
-    single partition, so the aggregates, windows and broadcast joins above
-    it plan no exchange: a small read runs as one job of one task, where
-    each exchange would cost its own stage and job for data that AQE then
-    coalesces back into one partition. The bound counts bytes only, not
-    Spark's per-file open cost, which would turn the rule off past about
-    31 files: a window over an aggregate of 1,100 tiny files (6.3 MB, 4
-    vCPU) took a median 18 CPU-s as one partition and 26 as Spark's
-    parallel scan."""
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    return df.coalesce(1) if nbytes <= conf.filesMaxPartitionBytes() else df
+    when Spark would not split those bytes for parallelism anyway.
+
+    Spark sizes a file split as ``min(maxPartitionBytes,
+    max(openCostInBytes, bytes / cores))`` (``FilePartition.maxSplitBytes``;
+    ``cores`` is ``spark.sql.files.minPartitionNum`` or the default
+    parallelism). The rule coalesces when ``nbytes`` fits that split. With
+    more than one core that means at most ``spark.sql.files.openCostInBytes``
+    (4 MB by default), which holds every ``daily_etl`` table (tens of KB)
+    and the reference's whole three-year Silver load (about 2 MB); a
+    larger read keeps Spark's parallel scan, so a 16-128 MB table is not
+    put on one core. ``Coalesce 1`` reports a single partition, so the
+    aggregates, windows and broadcast joins above it plan no exchange: a
+    small read runs as one job of one task, where each exchange would cost
+    its own stage and job for data that AQE then coalesces back into one
+    partition.
+
+    ``bytes`` here are the data bytes only. Spark also charges each file
+    ``openCostInBytes``, which would turn the rule off past one file a
+    core, so a long history of small files reads as one partition while
+    its data stays under the bound.
+
+    Compaction (:meth:`Catalog.compact`, ``_compact_partitions``) keeps its
+    file count over this read only because Spark's ``CollapseRepartition``
+    replaces the inner ``coalesce(1)`` with the compaction's outer
+    ``coalesce(n)``; a ``Project`` put between the two would stop that
+    and OPTIMIZE would write one file instead of ``n``."""
+    jspark = df.sparkSession._jsparkSession
+    conf = jspark.sessionState().conf()
+    if nbytes > conf.filesMaxPartitionBytes():
+        return df
+    if nbytes > conf.filesOpenCostInBytes():
+        # Past the open cost only bytes / cores can cover nbytes: one core.
+        n = conf.filesMinPartitionNum()
+        cores = n.get() if n.isDefined() else jspark.leafNodeDefaultParallelism()
+        if cores > 1:
+            return df
+    return df.coalesce(1)
 
 
 class ConstraintViolation(ValueError):
@@ -353,11 +378,13 @@ class Catalog:
         before a column was added (:meth:`add_column`) read back with
         nulls for it — parquet schema evolution without rewriting data.
 
-        A committed version whose files sum to at most
-        ``spark.sql.files.maxPartitionBytes`` reads as one partition, so
+        A committed version whose files Spark would not split for
+        parallelism (at most ``spark.sql.files.openCostInBytes``, 4 MB,
+        on more than one core; never past
+        ``spark.sql.files.maxPartitionBytes``) reads as one partition, so
         the aggregates and windows of a query over a small table run in
         one job of one task, with no shuffle; a larger one reads with
-        Spark's parallel file scan.
+        Spark's parallel file scan (:func:`one_partition_if_small`).
         """
         spec = self.tables[name]
         if isinstance(version, str):
@@ -1795,9 +1822,11 @@ class Catalog:
         so a vacuumed-file error names the commit that OWNS the missing
         file, not whichever version the batch happened to end on.
 
-        Files that sum to at most ``spark.sql.files.maxPartitionBytes``
-        read as one partition (:func:`one_partition_if_small`), so the
-        query above them needs no shuffle."""
+        Files whose bytes Spark would not split for parallelism (at most
+        ``spark.sql.files.openCostInBytes`` on more than one core, never
+        past ``spark.sql.files.maxPartitionBytes``) read as one partition
+        (:func:`one_partition_if_small`), so the query above them needs
+        no shuffle."""
         from pyspark.sql import functions as F
 
         if not files:
@@ -2575,6 +2604,8 @@ class Catalog:
                 df = df.coalesce(1)
             df = df.sortWithinPartitions(*spec.partition_by, key)
         else:
+            # Over a one-partition read this collapses into the read's
+            # coalesce(1) (see one_partition_if_small); keep it adjacent.
             df = df.coalesce(n)
         self.overwrite(name, df)
 
@@ -2831,6 +2862,8 @@ class Catalog:
                 f"OPTIMIZE WHERE predicate must reference only partition "
                 f"columns {spec.partition_by}: {where!r}"
             )
+        # The filter is pushed below a one-partition read's coalesce(1),
+        # which this coalesce then replaces (see one_partition_if_small).
         subset = self.table(name).filter(F.expr(where))
         subset = subset.coalesce(target_files_per_partition)
         if cluster_by:

@@ -1,6 +1,8 @@
 """Small committed tables read as one partition: a never-written table is an
 empty local relation, every gold view and parameterised dashboard read runs
-one Spark job, and the bound is ``spark.sql.files.maxPartitionBytes``."""
+one Spark job, and the bound is the bytes Spark would not split for
+parallelism: ``spark.sql.files.openCostInBytes`` on more than one core,
+capped by ``spark.sql.files.maxPartitionBytes``."""
 
 from __future__ import annotations
 
@@ -100,32 +102,50 @@ def test_every_dashboard_read_runs_one_job(spark, catalog, raw_root):
 
 
 @pytest.fixture
-def max_partition_bytes(spark):
-    """Set ``spark.sql.files.maxPartitionBytes`` for one test."""
-    key = "spark.sql.files.maxPartitionBytes"
-    old = spark.conf.get(key)
-    yield lambda n: spark.conf.set(key, str(n))
-    spark.conf.set(key, old)
+def spark_conf(spark):
+    """Set runtime Spark confs for one test, restoring them after."""
+    old = {}
+
+    def set_conf(key, value):
+        old.setdefault(key, spark.conf.get(key, None))
+        spark.conf.set(key, str(value))
+
+    yield set_conf
+    for key, value in old.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
 
 
-def test_one_partition_bound_is_max_partition_bytes(
-    spark, catalog, max_partition_bytes
-):
-    catalog.register("t.small", SCHEMA)
+def _small_table(spark, catalog, name, partition_by=()):
+    """Three 100-row appends, one file each; returns the data bytes."""
+    schema = SCHEMA
+    if partition_by:
+        schema = T.StructType([*SCHEMA.fields, T.StructField("p", T.StringType())])
+    catalog.register(name, schema, partition_by=partition_by)
     for lo in (0, 100, 200):
-        catalog.append(
-            "t.small",
-            spark.range(lo, lo + 100, numPartitions=1).select(
-                F.col("id").alias("k"), F.col("id").cast("string").alias("v")
-            ),
+        df = spark.range(lo, lo + 100, numPartitions=1).select(
+            F.col("id").alias("k"), F.col("id").cast("string").alias("v")
         )
-    path = catalog.tables["t.small"].path
-    nbytes = sum(
+        if partition_by:
+            df = df.withColumn("p", F.lit("a"))
+        catalog.append(name, df)
+    path = catalog.tables[name].path
+    return sum(
         os.path.getsize(os.path.join(d, f))
         for d, _, fs in os.walk(path)
         for f in fs
         if f.endswith(".parquet")
     )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_one_partition_bound_is_max_partition_bytes(spark, catalog, spark_conf):
+    nbytes = _small_table(spark, catalog, "t.small")
     ddl = DdlSession(catalog)
     # Each read names the same three files, so the same bound splits them.
     reads = {
@@ -136,16 +156,56 @@ def test_one_partition_bound_is_max_partition_bytes(
             "_change_type", "_commit_version"),
     }
 
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    max_partition_bytes(nbytes - 1)
+    spark_conf("spark.sql.files.maxPartitionBytes", nbytes - 1)
     over = {name: read() for name, read in reads.items()}
-    max_partition_bytes(nbytes)
+    spark_conf("spark.sql.files.maxPartitionBytes", nbytes)
     under = {name: read() for name, read in reads.items()}
     for name in reads:
         assert over[name].rdd.getNumPartitions() > 1, name
         assert "Coalesce" not in _plan(over[name]), name
         assert under[name].rdd.getNumPartitions() == 1, name
-        assert rows(over[name]) == rows(under[name]), name
-    assert len(rows(under["table"])) == 300
+        assert _rows(over[name]) == _rows(under[name]), name
+    assert len(_rows(under["table"])) == 300
+
+
+def test_bytes_past_the_open_cost_keep_the_parallel_scan(
+    spark, catalog, spark_conf
+):
+    """Under ``maxPartitionBytes`` but past ``openCostInBytes``, Spark would
+    split the bytes across cores, so the read keeps its parallel scan; on
+    one core (``minPartitionNum`` 1) it would not, so the read is one
+    partition."""
+    nbytes = _small_table(spark, catalog, "t.mid")
+    spark_conf("spark.sql.files.openCostInBytes", nbytes - 1)
+    over = catalog.table("t.mid")
+    assert over.rdd.getNumPartitions() > 1
+    assert "Coalesce" not in _plan(over)
+    spark_conf("spark.sql.files.minPartitionNum", 1)
+    one_core = catalog.table("t.mid")
+    assert one_core.rdd.getNumPartitions() == 1
+    assert _rows(over) == _rows(one_core)
+    assert len(_rows(over)) == 300
+
+
+def _live_files(catalog, name):
+    return catalog._load_manifest(name)[-1]["files"]
+
+
+def test_compaction_over_a_one_partition_read_keeps_its_file_count(
+    spark, catalog
+):
+    """OPTIMIZE's ``coalesce(n)`` replaces the read's ``coalesce(1)``, so a
+    small table still compacts into ``n`` files, with or without WHERE."""
+    _small_table(spark, catalog, "t.flat")
+    assert catalog.table("t.flat").rdd.getNumPartitions() == 1
+    catalog.compact("t.flat", target_files_per_partition=2)
+    assert len(_live_files(catalog, "t.flat")) == 2
+    assert len(_rows(catalog.table("t.flat"))) == 300
+
+    _small_table(spark, catalog, "t.parts", partition_by=("p",))
+    assert catalog.table("t.parts").rdd.getNumPartitions() == 1
+    catalog.compact("t.parts", where="p = 'a'", target_files_per_partition=2)
+    files = _live_files(catalog, "t.parts")
+    assert len(files) == 2, files
+    assert all(f.startswith("p=a/") for f in files), files
+    assert len(_rows(catalog.table("t.parts"))) == 300
