@@ -17,7 +17,10 @@ driver from such an archive when there is one, and otherwise makes one:
   Processes that start meanwhile start plain.
 - The archive is keyed by the JDK build, the Spark version, the jar list
   (names and sizes) and the heap-layout flags that CDS checks. A build
-  deletes what other keys left.
+  deletes what other keys left. Other driver options the caller passes
+  (``session.JIT_OPTIONS``) go on the same command line but not into the
+  key: CDS does not check them, and keying on them would make starts
+  with and without them delete each other's archive.
 - CDS refuses a non-empty directory on the classpath, and Spark's launcher
   puts the conf dir (``$SPARK_CONF_DIR``, else ``$SPARK_HOME/conf``) first
   on it. So the archive is used only while that directory holds nothing
@@ -99,9 +102,13 @@ def archive_key(spark_home: str, java_home: str, java_options: str) -> str:
     return "spark-" + h.hexdigest()[:16]
 
 
-def get_or_create(builder):
-    """``builder.getOrCreate()``, with the driver JVM started from the
-    class-data archive (see the module docstring)."""
+def get_or_create(builder, java_options: str = ""):
+    """``builder.getOrCreate()``, with the driver JVM started with
+    ``java_options`` and from the class-data archive (see the module
+    docstring). The options never enter :func:`archive_key`, so an
+    archive serves starts with and without them. A start that the user's
+    conf dir makes plain gets neither: it keeps exactly the user's
+    configuration."""
     global state
     from pyspark import SparkContext
 
@@ -110,17 +117,21 @@ def get_or_create(builder):
     state, flags, conf, lock = _plan()
     if flags is None:
         return builder.getOrCreate()
+    options = f"{java_options} {flags}".strip()
+    if options:
+        builder = builder.config("spark.driver.defaultJavaOptions", options)
     saved = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = conf  # launch_gateway copies os.environ
+    if conf is not None:
+        os.environ["SPARK_CONF_DIR"] = conf  # launch_gateway copies os.environ
     try:
-        spark = builder.config("spark.driver.defaultJavaOptions", flags).getOrCreate()
+        spark = builder.getOrCreate()
     except BaseException:
         if lock is not None:
             os.close(lock)
         raise
     finally:
         if saved is None:
-            del os.environ["SPARK_CONF_DIR"]
+            os.environ.pop("SPARK_CONF_DIR", None)
         else:
             os.environ["SPARK_CONF_DIR"] = saved
     if lock is not None:
@@ -129,8 +140,9 @@ def get_or_create(builder):
 
 
 def _plan() -> tuple[str, str | None, str | None, int | None]:
-    """(state, JVM flags or None for a plain start, the empty conf dir to
-    launch with, the held build lock or None)."""
+    """(state, the archive's JVM flags, the empty conf dir to launch with,
+    the held build lock or None). A plain start has flags ``""`` and no
+    conf dir; one that keeps the user's conf dir has flags None."""
     from pyspark.find_spark_home import _find_spark_home
 
     home = _find_spark_home()
@@ -143,7 +155,7 @@ def _plan() -> tuple[str, str | None, str | None, int | None]:
         return f"fallback: {conf} in use", None, None, None
     cache = cache_dir()
     if re.search(r"[\s\"'\\]", cache):
-        return f"fallback: {cache} needs quoting", None, None, None
+        return f"fallback: {cache} needs quoting", "", None, None
     java_home = os.environ.get("JAVA_HOME") or os.path.dirname(
         os.path.dirname(os.path.realpath(shutil.which("java") or "java"))
     )
@@ -161,12 +173,12 @@ def _plan() -> tuple[str, str | None, str | None, int | None]:
             return ("hit", *hit, None)
         lock = os.open(os.path.join(cache, "lock"), os.O_RDWR | os.O_CREAT, 0o644)
     except OSError as e:
-        return f"fallback: {e}", None, None, None
+        return f"fallback: {e}", "", None, None
     try:
         fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
     except OSError:
         os.close(lock)
-        return "busy", None, None, None
+        return "busy", "", None, None
     if os.path.exists(archive):  # published while we took the lock
         os.close(lock)
         return ("hit", *hit, None)

@@ -52,7 +52,8 @@ import time
 import urllib.parse
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.java_gateway import JavaClass
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import types as T
 
 
@@ -122,6 +123,20 @@ def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
     jspark = spark._jsparkSession
     jdf = jspark.createDataFrame([], jspark.parseDataType(schema.json()))
     return DataFrame(jdf, spark)
+
+
+def load_paths(reader: DataFrameReader, paths: list[str]) -> DataFrame:
+    """``reader.load(paths)`` in two Py4J round trips, however many paths.
+
+    PySpark hands a list to the JVM one element at a time (a Java
+    ``ArrayList`` built with one ``add`` call a path), so a read of a
+    table's committed files cost a round trip per file and grew with its
+    history. Here the paths cross as one NUL-joined string, which no path
+    can contain, and the JVM splits it into the ``String[]`` of
+    ``load(String...)``."""
+    client = reader._spark.sparkContext._gateway._gateway_client
+    split = JavaClass("org.apache.commons.lang3.StringUtils", client).split
+    return reader._df(reader._jreader.load(split("\0".join(paths), "\0")))
 
 
 def one_partition_if_small(df: DataFrame, nbytes: int) -> DataFrame:
@@ -434,15 +449,40 @@ class Catalog:
         live = manifest[-1]["files"] if manifest else []
         if not live:
             return None
-        return (
+        return load_paths(
             self.spark.read.format(spec.fmt)
             .schema(spec.physical_schema())
-            .option("basePath", spec.path)
-            .load([os.path.join(spec.path, f) for f in live])
+            .option("basePath", spec.path),
+            [os.path.join(spec.path, f) for f in live],
         )
 
     def _dv_dir(self, name: str) -> str:
         return os.path.join(self._meta_dir(name), "dv")
+
+    def _drop_deleted(
+        self, df: DataFrame, name: str, dvs: list[str], file_col: str, idx_col: str
+    ) -> DataFrame:
+        """``df`` without the rows that ``name``'s deletion-vector files
+        ``dvs`` mark deleted. ``df`` keys each row by its root-relative
+        file (``file_col``) and row index (``idx_col``)."""
+        from pyspark.sql import functions as F
+
+        if not dvs:
+            return df
+        dv = load_paths(
+            self.spark.read.format("parquet"),
+            [os.path.join(self._dv_dir(name), f) for f in dvs],
+        )
+        return df.join(
+            F.broadcast(
+                dv.select(
+                    F.col("file").alias(file_col),
+                    F.col("row_index").alias(idx_col),
+                )
+            ),
+            [file_col, idx_col],
+            "left_anti",
+        )
 
     def delete_where(
         self, name: str, predicate: str, rewrite: bool = False
@@ -497,20 +537,7 @@ class Catalog:
             ).alias("__f"),
             F.col("_metadata.row_index").alias("__i"),
         )
-        if prior:
-            dv_prior = self.spark.read.parquet(
-                *[os.path.join(self._dv_dir(name), f) for f in prior]
-            )
-            keyed = keyed.join(
-                F.broadcast(
-                    dv_prior.select(
-                        F.col("file").alias("__f"),
-                        F.col("row_index").alias("__i"),
-                    )
-                ),
-                ["__f", "__i"],
-                "left_anti",
-            )
+        keyed = self._drop_deleted(keyed, name, prior, "__f", "__i")
         hits = keyed.filter(F.expr(predicate)).select(
             F.col("__f").alias("file"), F.col("__i").alias("row_index")
         )
@@ -588,20 +615,7 @@ class Catalog:
             ).alias("__f"),
             F.col("_metadata.row_index").alias("__i"),
         )
-        if prior:
-            dv_prior = self.spark.read.parquet(
-                *[os.path.join(self._dv_dir(name), f) for f in prior]
-            )
-            keyed = keyed.join(
-                F.broadcast(
-                    dv_prior.select(
-                        F.col("file").alias("__f"),
-                        F.col("row_index").alias("__i"),
-                    )
-                ),
-                ["__f", "__i"],
-                "left_anti",
-            )
+        keyed = self._drop_deleted(keyed, name, prior, "__f", "__i")
         hits = keyed.filter(F.expr(predicate))
         types = {f.name: f.dataType for f in spec.schema.fields}
         updated = hits.select(
@@ -714,20 +728,7 @@ class Catalog:
             ).alias("__f"),
             F.col("_metadata.row_index").alias("__i"),
         )
-        if prior:
-            dv_prior = self.spark.read.parquet(
-                *[os.path.join(self._dv_dir(name), f) for f in prior]
-            )
-            keyed = keyed.join(
-                F.broadcast(
-                    dv_prior.select(
-                        F.col("file").alias("__f"),
-                        F.col("row_index").alias("__i"),
-                    )
-                ),
-                ["__f", "__i"],
-                "left_anti",
-            )
+        keyed = self._drop_deleted(keyed, name, prior, "__f", "__i")
         hits = keyed.filter(F.expr(predicate))
         dv_name = f"dv-{os.getpid()}-{time.time_ns()}"
         out = os.path.join(self._dv_dir(name), dv_name)
@@ -1301,7 +1302,7 @@ class Catalog:
         reader = self.spark.read.format(fmt).schema(spec.schema)
         for k, v in options.items():
             reader = reader.option(k, v)
-        df = reader.load(new)
+        df = load_paths(reader, new)
         n_rows = df.count()
         self.append(name, df)
         return (len(new), n_rows)
@@ -1887,7 +1888,7 @@ class Catalog:
             )
             if sig:
                 reader = reader.option("basePath", root)
-            df = reader.load([os.path.join(root, r) for r in rels])
+            df = load_paths(reader, [os.path.join(root, r) for r in rels])
             cols = _logical_cols(spec)
             abs_root = os.path.abspath(root)
             rel_expr = (
@@ -1906,18 +1907,8 @@ class Catalog:
         for p in parts[1:]:
             out = out.unionByName(p)
         if dvs:
-            dv = self.spark.read.parquet(
-                *[os.path.join(self._dv_dir(spec.name), f) for f in dvs]
-            )
-            out = out.join(
-                F.broadcast(
-                    dv.select(
-                        F.col("file").alias("__dv_file"),
-                        F.col("row_index").alias("__dv_idx"),
-                    )
-                ),
-                ["__dv_file", "__dv_idx"],
-                "left_anti",
+            out = self._drop_deleted(
+                out, spec.name, dvs, "__dv_file", "__dv_idx"
             ).drop("__dv_file", "__dv_idx")
         return one_partition_if_small(out, nbytes)
 
@@ -3226,8 +3217,10 @@ class Catalog:
         # mergeSchema: era-mixed files may lack the column (it reads NULL
         # there, and NULLs never enter a bloom — equality can't match them).
         df = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(*paths)
+            load_paths(
+                self.spark.read.format("parquet").option("mergeSchema", "true"),
+                paths,
+            )
             .where(F.col(phys).isNotNull())
             .select(
                 F.input_file_name().alias("__f"),

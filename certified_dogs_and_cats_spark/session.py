@@ -44,6 +44,15 @@ also be sane on a real multi-executor cluster:
   names it), while another process records, or when the cache dir cannot
   be written. Delete that directory to measure a cold start; the next
   start records again.
+- The driver JVM starts with HotSpot's C2 compile thresholds raised
+  (``JIT_OPTIONS``): a short-lived driver spent a third to a half of its
+  CPU in the C2 compiler, on analyser, optimiser and planner methods that
+  run too few times to pay for it. They stay in C1 code instead; hot methods
+  still reach C2, a little later. The options reach the driver JVM only
+  (in ``local[N]`` that is every executor thread too); executors on a
+  real cluster keep HotSpot's defaults. A start that the user's conf dir
+  makes plain keeps exactly that configuration, without them. See
+  ``JIT_OPTIONS`` for how they were sized.
 """
 
 from __future__ import annotations
@@ -78,6 +87,35 @@ LISTING_THRESHOLD = 256
 #: JVM with a 4.7-fold margin, while still bounding the metaspace a
 #: long-running process with ever-new plans can pin.
 CODEGEN_CACHE_ENTRIES = 2000
+
+#: HotSpot options of the driver JVM: C2 (tier 4) compiles a method only
+#: after four times HotSpot's default invocations and loop back-edges
+#: (JDK 17 defaults 5000, 600, 15000 and 40000). A daily date runs for
+#: seconds, and at the defaults the C2 threads took 30-40% of a warm
+#: date's CPU and half of a dashboard refresh's
+#: (``scripts/jvm_cpu_split.py``, 4 vCPU). In six dates C2 compiled about
+#: 4,000 methods, 88% of them once: Catalyst's analyser, optimiser and
+#: planner and the Scala and JDK collections under them, methods that run
+#: a few thousand times while a plan is built and then stop mattering.
+#: With the thresholds raised such lukewarm methods stay in C1's profiled
+#: code (about 2,500 reach C2), and hot ones still reach C2. The
+#: trade-off: that code stays a little slower, and a long-running process
+#: reaches the same C2 code later. Sized by a sweep of the multiplier, one
+#: interleaved run of each setting per seed, three seeds, 4 vCPU, median
+#: ``perfbench`` ``pass_cpu_s``: ``daily_etl`` 7.01 s at the defaults, 6.44
+#: at 2x, 4.99 at 4x and 4.77 at 8x; ``corpus_prep`` 26.5, 23.0 (4x) and
+#: 23.8 (8x). Past 4x the gain flattens on one workload and turns on the
+#: other. The four flags are one policy: C2's trigger is invocations past
+#: the first threshold, or past the second with invocations plus
+#: back-edges past the third; the fourth is the loop (OSR) trigger, and
+#: leaving it at its default gave back a third of ``daily_etl``'s gain
+#: (5.65 s). ``-XX:CompileThresholdScaling`` would also delay C1, and C1
+#: alone (``-XX:TieredStopAtLevel=1``) is a measured dead end on the corpus
+#: (ROADMAP). The class-data archive's key ignores these options.
+JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400 "
+    "-XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=160000"
+)
 
 
 def default_parallelism() -> int:
@@ -114,7 +152,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),
         )
     )
-    spark = class_archive.get_or_create(builder)
+    spark = class_archive.get_or_create(builder, JIT_OPTIONS)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

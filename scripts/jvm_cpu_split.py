@@ -13,7 +13,7 @@ and the CPU seconds, the CPU split by JVM thread kind as read from
 ``/proc/<jvm>/task/*/stat``:
 
 - ``exec``: executor task threads (the query's own work);
-- ``jit``: the C1/C2 compiler threads (HotSpot JIT);
+- ``c1``, ``c2``: HotSpot's C1 and C2 JIT compiler threads;
 - ``gc``: garbage collector and VM threads;
 - ``driver``: Py4J server threads and the JVM's main thread (plan
   construction and analysis driven from Python);
@@ -29,7 +29,13 @@ and the Py4J round trips from Python into the JVM (:class:`Py4JCounter`):
   reference to a JVM object. They are sent asynchronously, so a release
   may be booked to the query or date after the one that dropped it;
 
-and the Spark jobs it ran (``jobs``).
+and the Spark jobs it ran (``jobs``), and the milliseconds spent
+compiling:
+
+- ``jit_ms``: HotSpot's JIT, C1 and C2 together
+  (``CompilationMXBean.getTotalCompilationTime``);
+- ``jan_ms``: Janino, compiling Spark's generated classes (the sum of
+  Spark's ``CodegenMetrics`` compilation times).
 
 It also prints the Janino compiles (Spark's ``CodegenMetrics``
 compilation count) of each corpus pass, or of each date: a corpus pass
@@ -63,17 +69,22 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-KINDS = ("exec", "jit", "gc", "driver", "other", "python")
-COUNTS = ("py4j", "rel", "jobs")
+KINDS = ("exec", "c1", "c2", "gc", "driver", "other", "python")
+COUNTS = ("py4j", "rel", "jobs", "janino", "jit_ms", "jan_ms")
 FIRST_STEADY_DATE = 3
+#: Samples Spark's codegen compile-time histogram keeps (Dropwizard's
+#: default reservoir size).
+JANINO_SAMPLES = 1028
 
 
 def thread_kind(comm: str) -> str:
     """JVM thread kind from its (15-character) Linux thread name."""
     if comm.startswith("Executor task"):
         return "exec"
-    if comm.startswith(("C1 Compiler", "C2 Compiler")):
-        return "jit"
+    if comm.startswith("C1 Compiler"):
+        return "c1"
+    if comm.startswith("C2 Compiler"):
+        return "c2"
     if comm.startswith(("GC Thread", "G1 ", "VM Thread", "VM Periodic")):
         return "gc"
     if comm == "java" or comm.startswith(("Thread-", "py4j")):
@@ -171,16 +182,34 @@ class Py4JCounter:
 
 def compiles(spark) -> int:
     """Janino compilations in this JVM so far."""
+    return int(_janino(spark).getCount())
+
+
+def compile_ms(spark) -> tuple[int, int]:
+    """(HotSpot JIT, Janino) compile milliseconds in this JVM so far.
+
+    Janino's is the sum of Spark's compile-time histogram, whose reservoir
+    keeps its first ``JANINO_SAMPLES`` samples whole; past that the sum is
+    only a sample's (:func:`main` says so)."""
+    jvm = spark.sparkContext._jvm
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    values = _janino(spark).getSnapshot().getValues()
+    return (int(jit.getTotalCompilationTime()),
+            int(jvm.java.util.Arrays.stream(values).sum()))
+
+
+def _janino(spark):
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
-    return int(metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount())
+    return metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
 
 
 def measure(spark, jvm_pid: int, fn) -> dict[str, float]:
     """Run ``fn()`` and return what it cost: wall, CPU by thread kind (see
-    :func:`delta`), Py4J round trips, Spark jobs and Janino compiles."""
+    :func:`delta`), Py4J round trips, Spark jobs, Janino compiles and the
+    JIT's and Janino's compile milliseconds."""
     sc = spark.sparkContext
     group = f"jvm_cpu_split-{time.monotonic_ns()}"
-    c0 = compiles(spark)
+    c0, ms0 = compiles(spark), compile_ms(spark)
     sc.setJobGroup(group, group)
     try:
         before, t0 = sample(jvm_pid), time.perf_counter()
@@ -193,12 +222,14 @@ def measure(spark, jvm_pid: int, fn) -> dict[str, float]:
     d["py4j"], d["rel"] = n.calls, n.releases
     d["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
     d["janino"] = compiles(spark) - c0
+    d["jit_ms"], d["jan_ms"] = (
+        b - a for a, b in zip(ms0, compile_ms(spark)))
     return d
 
 
 def print_row(label: str, d: dict[str, float], cols: tuple[str, ...]) -> None:
     print(f"{label:<26}" + "".join(
-        f"{d[c]:>8.0f}" if c in COUNTS + ("janino",) else f"{d[c]:>8.2f}"
+        f"{d[c]:>8.0f}" if c in COUNTS else f"{d[c]:>8.2f}"
         for c in cols))
 
 
@@ -269,7 +300,7 @@ def daily(spark, jvm_pid: int, args) -> None:
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
-    cols = ("wall", "total") + KINDS + COUNTS + ("janino",)
+    cols = ("wall", "total") + KINDS + COUNTS
     for title, rows in (("one run() per date", dates),
                         (f"dashboard refresh, {len(GOLD_VIEWS)} views read"
                          " whole, after each date's run()", reads)):
@@ -308,9 +339,13 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("jvm_cpu_split", cpus=cpus)
     jvm_pid = spark.sparkContext._gateway.proc.pid
     print(f"# {cpus} CPUs, Spark {spark.version}; seconds, except the "
-          "counts (py4j, rel, jobs, janino)")
+          "counts (py4j, rel, jobs, janino) and milliseconds (jit_ms, "
+          "jan_ms)")
     try:
         (daily if args.daily is not None else corpus)(spark, jvm_pid, args)
+        if compiles(spark) > JANINO_SAMPLES:
+            print(f"# more than {JANINO_SAMPLES} Janino compiles: jan_ms "
+                  "sums a sample of them, not all")
     finally:
         spark.stop()
     return 0

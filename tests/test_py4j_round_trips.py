@@ -49,3 +49,24 @@ def test_read_and_append_cost_does_not_grow_with_columns(spark, catalog):
     (append2, read2), (append24, read24) = cost[2], cost[24]
     assert abs(append24 - append2) <= 4, cost
     assert abs(read24 - read2) <= 4, cost
+
+
+def test_read_cost_does_not_grow_with_files(spark, catalog):
+    """A catalog read hands its committed file list to the JVM in a fixed
+    number of round trips: a 5-file and a 50-file table cost the same,
+    and each read returns exactly the rows appended."""
+    Py4JCounter = _counter()
+    cost = {}
+    for files in (5, 50):
+        name = f"rt.f{files}"
+        catalog.register(
+            name, T.StructType([T.StructField("id", T.LongType())])
+        )
+        # One non-empty partition, so one file, per input slice.
+        catalog.append(name, spark.range(0, 2 * files, numPartitions=files))
+        assert len(catalog._load_manifest(name)[-1]["files"]) == files
+        with Py4JCounter(spark) as n:
+            df = catalog.table(name)
+        cost[files] = n.calls
+        assert sorted(r.id for r in df.collect()) == list(range(2 * files))
+    assert cost[5] == cost[50], cost
