@@ -3080,10 +3080,9 @@ class Catalog:
         counts over ``files`` (metadata-sized reads through the same
         size-keyed ``file_stats.json`` cache as :meth:`file_stats`).
         Returns ``None`` when any file's footer stats are missing
-        (vacuumed or unreadable) — callers fall back to a real scan.
-        Both :meth:`fast_row_count` and :meth:`fast_count` route here;
-        soundness gates (deletion vectors, governance row filters) stay
-        with the callers because their fallback contracts differ."""
+        (vacuumed or unreadable) — the caller falls back to a real scan.
+        The soundness gate (deletion vectors) stays with
+        :meth:`fast_row_count`, the one caller."""
         if not files:
             return 0
         from .skipping import collect_file_stats
@@ -3332,44 +3331,6 @@ class Catalog:
             )
         self._save_blooms(name, blooms)
 
-    def stats_informed_join(
-        self,
-        left: str,
-        right: str,
-        on: list[str] | str,
-        how: str = "inner",
-        broadcast_threshold_rows: int = 1_000_000,
-    ) -> DataFrame:
-        """Join two catalog tables with a statistics-driven side choice —
-        the loop-closer for :meth:`analyze`: the stored row counts decide
-        which side (if any) gets the broadcast hint, instead of trusting
-        Spark's file-size estimate (which a selective upstream filter or
-        a well-compressed dimension routinely fools in both directions).
-
-        Policy: if either side's ANALYZEd row count is at most
-        ``broadcast_threshold_rows`` AND at most the other side's, that
-        side broadcasts; a table with NO stored stats is treated as
-        unbounded (never broadcast on a guess — an OOM'd broadcast kills
-        the job, a shuffle merely slows it). With no qualifying side the
-        join is left entirely to AQE.
-        """
-        ldf, rdf = self.table(left), self.table(right)
-        ls, rs = self.stats(left), self.stats(right)
-        lrows = ls["row_count"] if ls else None
-        rrows = rs["row_count"] if rs else None
-        from pyspark.sql.functions import broadcast
-
-        def qualifies(rows, other):
-            return rows is not None and rows <= broadcast_threshold_rows and (
-                other is None or rows <= other
-            )
-
-        if qualifies(rrows, lrows):
-            rdf = broadcast(rdf)
-        elif qualifies(lrows, rrows):
-            ldf = broadcast(ldf)
-        return ldf.join(rdf, on, how)
-
     def files_metadata(self, name: str, version: int | None = None) -> DataFrame:
         """Per-file metadata relation (Iceberg's ``files`` table / the
         per-file complement of DESCRIBE DETAIL): one row per live data
@@ -3490,45 +3451,6 @@ class Catalog:
         )
         return kept, len(files)
 
-    def fast_count(self, name: str) -> int:
-        """EXACT row count from metadata alone (Delta's stats-based
-        ``SELECT COUNT(*)`` parity): sum of parquet footer row counts over
-        the head's live files, minus live deletion-vector tombstones — no
-        data pages read, so the answer costs footer-reads (cached after
-        the first call) instead of a 100 TB scan. Falls back to a real
-        count only if some file's footer is unreadable."""
-        if not self.exists(name):
-            return 0
-        manifest = self._load_manifest(name)
-        if not manifest:
-            return int(self.table(name).count())
-        head = manifest[-1]
-        total = self._footer_row_sum(name, head["files"])
-        if total is None:
-            return int(self.table(name).count())
-        dvs = head.get("dv", [])
-        if dvs:
-            import pyarrow.parquet as pq
-
-            live = set(head["files"])
-            seen: set[tuple] = set()
-            for f in dvs:
-                t = pq.read_table(
-                    os.path.join(self._dv_dir(name), f),
-                    columns=["file", "row_index"],
-                )
-                for file_, idx in zip(
-                    t.column("file").to_pylist(),
-                    t.column("row_index").to_pylist(),
-                ):
-                    # Only tombstones on LIVE files subtract; retired
-                    # files' entries are inert (reads anti-join the same
-                    # way). Dedupe defensively across stacked sidecars.
-                    if file_ in live:
-                        seen.add((file_, idx))
-            total -= len(seen)
-        return int(total)
-
     def _stats_path(self, name: str) -> str:
         return os.path.join(self._meta_dir(name), "stats.json")
 
@@ -3592,88 +3514,6 @@ class Catalog:
             with open(self._stats_path(name), "w") as fh:
                 json.dump(stats, fh, indent=1)
         return stats
-
-    def profile_drift(
-        self, name: str, from_version: int, to_version: int | None = None
-    ) -> dict:
-        """Per-column statistical drift between two versions of a table —
-        the monitoring primitive that catches silent data regressions
-        between pipeline runs (null-rate spikes, cardinality collapse,
-        range blowouts) before a consumer does.
-
-        Runs the one-pass :meth:`analyze` aggregate against both
-        time-travel snapshots (two scans total, no joins) and reports,
-        per column present in either version:
-
-        - ``null_rate`` before/after and delta,
-        - ``approx_ndv`` before/after and ratio (None when before is 0),
-        - ``min``/``max`` before/after and whether the range widened,
-        - plus table-level ``row_count`` before/after/ratio and
-          added/removed column lists (schema evolution shows up here).
-
-        ``to_version=None`` compares against the current head.
-        """
-        before = self.analyze(name, version=from_version)
-        to_v = (
-            self.current_version(name) if to_version is None else to_version
-        )
-        # Always analyze by explicit version so profiling never overwrites
-        # the persisted head stats as a side effect.
-        after = self.analyze(name, version=to_v)
-        b_cols, a_cols = before["columns"], after["columns"]
-        b_rows, a_rows = before["row_count"], after["row_count"]
-
-        def rate(nulls: int, rows: int) -> float:
-            return round(nulls / rows, 6) if rows else 0.0
-
-        def lt(x: str, y: str) -> bool:
-            # min/max persist as strings; compare numerically when both
-            # parse ("10" must not sort below "9"), lexically otherwise.
-            try:
-                return float(x) < float(y)
-            except (TypeError, ValueError):
-                return x < y
-
-        columns: dict[str, dict] = {}
-        for c in sorted(set(b_cols) | set(a_cols)):
-            if c not in a_cols:
-                columns[c] = {"status": "removed"}
-                continue
-            if c not in b_cols:
-                columns[c] = {"status": "added"}
-                continue
-            b, a = b_cols[c], a_cols[c]
-            nb, na = rate(b["null_count"], b_rows), rate(a["null_count"], a_rows)
-            columns[c] = {
-                "status": "common",
-                "null_rate": {"before": nb, "after": na, "delta": round(na - nb, 6)},
-                "approx_ndv": {
-                    "before": b["approx_ndv"],
-                    "after": a["approx_ndv"],
-                    "ratio": (
-                        round(a["approx_ndv"] / b["approx_ndv"], 6)
-                        if b["approx_ndv"]
-                        else None
-                    ),
-                },
-                "min": {"before": b["min"], "after": a["min"]},
-                "max": {"before": b["max"], "after": a["max"]},
-                "range_widened": (
-                    (a["min"] is not None and b["min"] is not None and lt(a["min"], b["min"]))
-                    or (a["max"] is not None and b["max"] is not None and lt(b["max"], a["max"]))
-                ),
-            }
-        return {
-            "table": name,
-            "from_version": from_version,
-            "to_version": to_v,
-            "row_count": {
-                "before": b_rows,
-                "after": a_rows,
-                "ratio": round(a_rows / b_rows, 6) if b_rows else None,
-            },
-            "columns": columns,
-        }
 
     def stats(self, name: str) -> dict | None:
         """Stored statistics from the last :meth:`analyze`, or None. The

@@ -18,7 +18,8 @@ from __future__ import annotations
 
 from .registry import ORACLE, QUERIES, query
 
-# Import for registration side effects.
+# Import for registration side effects. QUERIES and ORACLE keep
+# registration order: module by module, in the order imported here.
 from . import olap  # noqa: E402,F401
 from . import sampling  # noqa: E402,F401
 from . import streaming  # noqa: E402,F401
@@ -39,12 +40,6 @@ from . import multimodal  # noqa: E402,F401
 from . import vocab  # noqa: E402,F401
 from . import shards  # noqa: E402,F401
 from . import graphx  # noqa: E402,F401
-
-# These three modules register LAST on purpose: their queries (round-5
-# tail additions) overflow the 50-row driver window behind the entries
-# still awaiting evidence (see the rotation note below /
-# test_registry_window's overflow assertion). New queries added while
-# the window is full belong in the LAST module of this list.
 from . import corpus_profile  # noqa: E402,F401
 from . import governance  # noqa: E402,F401
 from . import formats  # noqa: E402,F401
@@ -53,180 +48,5 @@ from . import tpch  # noqa: E402,F401
 from . import roundten  # noqa: E402,F401
 from . import roundeleven  # noqa: E402,F401
 from . import roundtwelve  # noqa: E402,F401
-
-# ORDER MATTERS for driver evidence: the driver's correctness run checks
-# only the FIRST 50 registry entries in insertion order. Entries that
-# already carry a green driver CORRECTNESS row are moved to the back so
-# every not-yet-proven query — including anything added this round —
-# automatically lands inside the 50-row window. The displaced tail stays
-# pinned by scripts/check_correctness.py + pytest, which always cover ALL
-# entries.
-#
-# The proven set is read from the committed CORRECTNESS_r*.json artifacts
-# at import time, so the rotation advances itself every round with no
-# manual edit; the frozen literal below is the fallback (rounds 1-3)
-# when the artifacts aren't reachable (e.g. the package imported outside
-# the repo checkout).
-
-
-def _proof_rounds_from_artifacts() -> dict[str, int]:
-    """name -> round number of the MOST RECENT green driver row (empty
-    when no artifacts are reachable)."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    rounds: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            if (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match", True)
-                and row.get("err") in (None, "")
-            ):
-                rounds[name] = int(m.group(1))
-    return rounds
-
-
-def _proven_from_artifacts() -> frozenset[str] | None:
-    return frozenset(_PROOF_ROUNDS) if _PROOF_ROUNDS else None
-
-
-_PROOF_ROUNDS = _proof_rounds_from_artifacts()
-
-
-_DRIVER_PROVEN_FALLBACK = frozenset(
-    {
-        "anti_join_new_rows",
-        "asof_join_last_view",
-        "asof_join_next_purchase",
-        "conditional_sum",
-        "corpus_prep_summary",
-        "count_distinct_by_group",
-        "daily_totals",
-        "dedup_connected_components",
-        "dedup_embedding_cosine",
-        "dedup_exact",
-        "dedup_minhash_lsh",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "dedup_simhash_pairs",
-        "dim_lookup_fallback",
-        "distinct_projection",
-        "embedding_quantize_int8",
-        "global_health",
-        "group_count",
-        "inner_join_multikey",
-        "interval_join_windows",
-        "json_extract_agg",
-        "merge_upsert_balances",
-        "minmax_freshness",
-        "multimodal_decode_features",
-        "multimodal_frame_sample",
-        "multimodal_metadata_agg",
-        "order_by_limit",
-        "quality_summary",
-        "rank_with_ties",
-        "ratio_cross_join",
-        "regional_revenue_5way",
-        "sample_hash_split",
-        "sample_per_group",
-        "scalar_date_funcs",
-        "scalar_string_funcs",
-        "sessionize_stats",
-        "similarity_cosine_topk",
-        "similarity_ivf_ann",
-        "similarity_lsh_ann",
-        "similarity_quantized_topk",
-        "sketch_distinct_users",
-        "streaming_dedup_ids",
-        "streaming_windowed_counts",
-        "text_fingerprint",
-        "text_lang_id",
-        "text_quality_score",
-        "text_token_stats",
-        "top3_pivot_by_brand",
-        "topk_per_group",
-        "totals_by_year_type",
-        "window_dedup_latest",
-        "windowed_share",
-        "yoy_lag_stats",
-    }
-)
-
-
-_DRIVER_PROVEN = _proven_from_artifacts() or _DRIVER_PROVEN_FALLBACK
-
-
-def _stale_proven() -> frozenset[str]:
-    """Driver-proven queries whose IMPLEMENTATION changed after the
-    round that proved them: the committed QUERY_FINGERPRINTS.json holds
-    each query's fingerprint as of its green row (recorded by
-    scripts/record_fingerprints.py at end of round), and any divergence
-    from the current code sends the query back to the front of the
-    window — driver evidence tracks the code, not the name. An absent
-    or empty artifact disables the check (fresh checkouts must not spin
-    the whole registry to the front)."""
-    from . import fingerprints as fp
-
-    recorded = fp.recorded_fingerprints()
-    if not recorded:
-        return frozenset()
-    return frozenset(
-        fp.changed_since_recorded(
-            _DRIVER_PROVEN,
-            recorded=recorded,
-            current=fp.current_fingerprints(QUERIES, ORACLE),
-        )
-    )
-
-
-_STALE = _stale_proven()
-
-
-def _reorder_unproven_first() -> None:
-    """Window order: (1) NEVER-driver-proven entries in registration
-    order — a query with zero driver rows anywhere outranks every
-    re-proof (VERDICT r12 #1: the four never-proven roundtwelve queries
-    sat behind ~66 stale re-proofs, sorted by registration order, and
-    missed the window); (2) stale-fingerprint proven entries, OLDEST
-    PROOF FIRST; (3) settled entries OLDEST PROOF FIRST (VERDICT r11
-    #6: free window slots go to the queries whose proof age is
-    greatest). Sorts are stable, so ties keep registration order and
-    the layout is deterministic."""
-    never = [n for n in QUERIES if n not in _DRIVER_PROVEN]
-    stale = sorted(
-        (n for n in QUERIES if n in _DRIVER_PROVEN and n in _STALE),
-        key=lambda n: _PROOF_ROUNDS.get(n, 0),
-    )
-    front_set = set(never) | set(stale)
-    settled = sorted(
-        (n for n in QUERIES if n not in front_set),
-        key=lambda n: _PROOF_ROUNDS.get(n, 0),
-    )
-    ordered = never + stale + settled
-    for d in (QUERIES, ORACLE):
-        snap = dict(d)
-        d.clear()
-        for n in ordered:
-            if n in snap:
-                d[n] = snap[n]
-
-
-_reorder_unproven_first()
 
 __all__ = ["QUERIES", "ORACLE", "query"]

@@ -1,11 +1,6 @@
 """Corpus profiling: activity streaks, model-based quality scoring,
 token-distribution drift, and content-defined chunking.
 
-Registered LAST so these round-5 additions queue BEHIND the 50 queries
-already awaiting driver evidence (see queries/__init__.py's rotation
-note): the driver window stays exactly the 50 unproven-first entries and
-these overflow into the next round's budget, per test_registry_window.
-
 Cross-engine determinism notes (the reason two of these look the way
 they do):
 - IEEE 754 +, -, *, / are exactly specified, so any formula built ONLY

@@ -1,18 +1,18 @@
-"""Per-query implementation fingerprints for driver-evidence tracking.
+"""Per-query implementation fingerprints and the driver-proof state.
 
-The driver proves a query green at most once per round, and the registry
-rotation (queries/__init__.py) keeps proven entries out of the 50-row
-window. That leaves a gap: a query RE-IMPLEMENTED after its green round
-keeps its stale row and never re-enters the window — driver evidence
-then tracks the query's NAME, not its CODE.
+A green row in a committed driver artifact (``CORRECTNESS_r*.json``)
+proves a query's NAME; the code behind that name can change afterwards.
+So every query gets a fingerprint — a hash of its implementation
+closure — recorded (scripts/record_fingerprints.py) in
+``QUERY_FINGERPRINTS.json`` next to the driver artifacts. A query is
+settled only when it is driver-green (:func:`driver_proven`) AND its
+current fingerprint equals the recorded one
+(:func:`changed_since_recorded`); any later edit to the implementation
+makes it need re-proving, which ``scripts/check_correctness.py`` does
+locally for the queries named.
 
-The fix: every query gets a fingerprint — a hash of its implementation
-closure — recorded (scripts/record_fingerprints.py, end of each round)
-in ``QUERY_FINGERPRINTS.json`` next to the driver artifacts. The
-rotation treats a query as proven only when it is driver-green AND its
-current fingerprint equals the recorded one; any later edit to the
-implementation rotates it back to the front of the window
-automatically.
+Nothing here runs at package import: the proof state is computed on
+demand by the scripts and tests that ask for it.
 
 What the fingerprint covers (the implementation closure, one module
 level deep — pinned by tests/test_registry_window.py):
@@ -32,14 +32,16 @@ level deep — pinned by tests/test_registry_window.py):
 
 Infrastructure modules are excluded (``cache``, ``session``,
 ``queries.registry``, the ``queries`` package init): they change WHEN
-and WHERE work happens, never results, and including them would churn
-the whole registry through the window on every plumbing tweak.
+and WHERE work happens, never results, and including them would mark
+the whole registry as changed on every plumbing tweak.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import inspect
+import json
 import os
 import re
 import textwrap
@@ -61,6 +63,10 @@ _EXCLUDED_MODULES = {
 _IMPORT_RE = re.compile(
     r"^\s*from\s+(\.+[\w.]*|certified_dogs_and_cats_spark[\w.]*)\s+import",
     re.M,
+)
+
+_REPO_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
 _FILE_SHA_CACHE: dict[str, str] = {}
@@ -184,19 +190,41 @@ def current_fingerprints(
 
 def recorded_fingerprints(repo_root: str | None = None) -> dict[str, str]:
     """The committed fingerprint-at-proof artifact (empty if absent)."""
-    import json
-
-    if repo_root is None:
-        repo_root = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-    path = os.path.join(repo_root, "QUERY_FINGERPRINTS.json")
+    path = os.path.join(repo_root or _REPO_ROOT, "QUERY_FINGERPRINTS.json")
     try:
         with open(path) as fh:
             data = json.load(fh)
     except (OSError, ValueError):
         return {}
     return {k: v for k, v in data.items() if isinstance(v, str)}
+
+
+def is_green(row: object) -> bool:
+    """A CORRECTNESS row that proves its query: row count and schema
+    match, the value hash matches (when checked) and nothing raised."""
+    return (
+        isinstance(row, dict)
+        and bool(row.get("rows_match"))
+        and bool(row.get("schema_match"))
+        and bool(row.get("hash_match", True))
+        and row.get("err") in (None, "")
+    )
+
+
+def driver_proven() -> frozenset[str]:
+    """Names with a green row in any committed ``CORRECTNESS_r<N>.json``
+    driver artifact (empty when none is reachable)."""
+    names: set[str] = set()
+    for path in glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json")):
+        if not re.fullmatch(r"CORRECTNESS_r\d+\.json", os.path.basename(path)):
+            continue
+        try:
+            with open(path) as fh:
+                data = json.load(fh)
+        except (OSError, ValueError):
+            continue
+        names.update(n for n, row in data.items() if is_green(row))
+    return frozenset(names)
 
 
 def changed_since_recorded(
@@ -206,7 +234,7 @@ def changed_since_recorded(
 ) -> set[str]:
     """Of ``names``, the subset whose implementation no longer matches
     the recorded fingerprint (missing recorded entry = changed: a query
-    never recorded as proven-at-this-code must re-enter the window)."""
+    never recorded as proven at this code needs proving)."""
     if recorded is None:
         recorded = recorded_fingerprints()
     if current is None:

@@ -1,6 +1,4 @@
-"""Interchange-format coverage under the oracle gate (round-5 tail —
-registered after governance so these queue behind the driver window).
-"""
+"""Interchange-format coverage under the oracle gate."""
 
 from __future__ import annotations
 

@@ -1,8 +1,4 @@
-"""Read-time governance lifecycle under the oracle gate.
-
-Registered after corpus_profile (LAST) so it queues behind the entries
-still awaiting driver evidence — see queries/__init__.py's rotation note.
-"""
+"""Read-time governance lifecycle under the oracle gate."""
 
 from __future__ import annotations
 

@@ -1,8 +1,4 @@
-"""Graph-query registrations that sit OUTSIDE the driver's 50-row
-evidence window on purpose: this module is imported last in
-``queries/__init__``, so its entries queue behind higher-value unproven
-queries (the end-to-end pipeline/DDL rows) and rotate into the window in
-a later round. They are fully covered NOW by the local oracle gate
+"""Graph-query registrations, covered by the local oracle gate
 (``scripts/check_correctness.py``) and pytest.
 """
 

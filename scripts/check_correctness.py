@@ -8,9 +8,9 @@ Usage: python scripts/check_correctness.py [sf_dir] [query ...]
 
 When run over the FULL registry (no query filter), the per-query results
 are also written to ``CORRECTNESS_local.json`` at the repo root in the
-driver's row format, so the builder-side gate is a committed, auditable
-artifact covering every registered query — including the ones outside
-the driver's 50-entry per-round window. Keys starting with ``_`` are
+driver's row format, so the local gate is a committed, auditable
+artifact covering every registered query, whether or not a driver
+artifact (``CORRECTNESS_r*.json``) proves it. Keys starting with ``_`` are
 reserved for artifact metadata, not queries: ``_fingerprints`` holds each
 query's implementation fingerprint at gate time. A reader iterating the
 query rows must skip them.

@@ -1,26 +1,25 @@
 """Maintain QUERY_FINGERPRINTS.json — each query's implementation
 fingerprint AS OF ITS LAST DRIVER-GREEN PROOF.
 
-The registry rotation (queries/__init__.py::_stale_proven) fronts any
-query whose current fingerprint diverges from its recorded one, so
-driver evidence tracks the CODE, not the name. That contract fixes WHEN
-an entry may be stamped: only once driver evidence exists for the code
-the stamp describes.
+A query is settled when a committed driver artifact proves it
+(``fingerprints.driver_proven``) and its current fingerprint equals its
+recorded one (``fingerprints.changed_since_recorded``), so driver
+evidence tracks the CODE, not the name. That fixes WHEN an entry may be
+stamped: only once driver evidence exists for the code the stamp
+describes.
 
 Two modes:
 
-- ``--sync`` (run at ROUND START, after a new CORRECTNESS_r*.json
-  lands): every query green in the NEWEST artifact gets stamped with its
-  current fingerprint — the driver ran against the previous round's
-  final commit, and nothing has changed since, so current == proven
-  code. Queries not green in that artifact keep their old stamps.
-- default (run at ROUND END, last commit): refresh stamps ONLY for
-  queries that are settled (driver-proven AND fingerprint-unchanged —
-  for them this is a no-op by definition) and leave every needy entry
-  (unproven, or proven-but-since-edited) UNSTAMPED so it stays at the
-  front of the driver window until a new artifact proves the new code.
-  ``--stale n1 n2`` additionally blanks entries known to be stale (e.g.
-  flagged by a judge review).
+- ``--sync`` (run after a new CORRECTNESS_r*.json lands): every query
+  green in the NEWEST artifact gets stamped with its current fingerprint
+  — the driver ran against the commit the tree is at, so current ==
+  proven code. Queries not green in that artifact keep their old stamps.
+- default (run at the last commit of a change): refresh stamps ONLY for
+  queries that are settled (for them this is a no-op by definition) and
+  leave every needy entry (unproven, or proven-but-since-edited)
+  UNSTAMPED, so it keeps needing proof until a new artifact proves the
+  new code. ``--stale n1 n2`` additionally blanks entries known to be
+  stale (e.g. flagged by a review).
 
 The bootstrap case (no file yet) records everything as-is; use
 ``--stale`` for any queries already known to have changed post-proof.
@@ -35,14 +34,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from certified_dogs_and_cats_spark.queries import (  # noqa: E402
-    _DRIVER_PROVEN,
-    _STALE,
-    ORACLE,
-    QUERIES,
-)
+from certified_dogs_and_cats_spark.queries import ORACLE, QUERIES  # noqa: E402
 from certified_dogs_and_cats_spark.queries.fingerprints import (  # noqa: E402
+    changed_since_recorded,
     current_fingerprints,
+    driver_proven,
+    is_green,
 )
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -55,16 +52,6 @@ def _latest_artifact() -> dict:
         return {}
     with open(files[-1]) as fh:
         return json.load(fh)
-
-
-def _green(row: dict) -> bool:
-    return bool(
-        isinstance(row, dict)
-        and row.get("rows_match")
-        and row.get("schema_match")
-        and row.get("hash_match", True)
-        and row.get("err") in (None, "")
-    )
 
 
 def main() -> None:
@@ -88,26 +75,28 @@ def main() -> None:
         mode = "bootstrap"
     elif sync:
         fps = dict(prior)
-        greens = [n for n, row in _latest_artifact().items() if _green(row)]
+        greens = [n for n, row in _latest_artifact().items() if is_green(row)]
         for n in greens:
             if n in cur:
                 fps[n] = cur[n]
         mode = f"sync ({len(greens)} green rows stamped)"
     else:
-        # Round end: stamps may only describe driver-proven code — needy
-        # entries keep their old (mismatching or absent) values so the
-        # rotation keeps them in the window for the coming driver run.
+        # Stamps may only describe driver-proven code — needy entries
+        # keep their old (mismatching or absent) values, so they keep
+        # needing proof until a driver run proves the new code.
+        proven = driver_proven()
+        changed = changed_since_recorded(proven, current=cur)
         fps = {}
         kept = 0
         for n in QUERIES:
-            needy = n not in _DRIVER_PROVEN or n in _STALE
+            needy = n not in proven or n in changed
             if needy:
                 if n in prior:
                     fps[n] = prior[n]
                 kept += 1
             else:
                 fps[n] = cur[n]
-        mode = f"round-end ({kept} needy entries left unstamped)"
+        mode = f"default ({kept} needy entries left unstamped)"
     for name in stale:
         fps[name] = ""
     # Full-registry coverage invariant (r11 VERDICT ask #2): every

@@ -76,94 +76,3 @@ def test_analyze_snapshot_version_does_not_persist(catalog, spark):
     assert s["row_count"] == 4 and s["version"] == v1
     # Snapshot analysis leaves the persisted head stats untouched.
     assert catalog.stats("t.snapan") is None
-
-
-def test_profile_drift_flags_null_spike_and_growth(catalog, spark):
-    catalog.register("t.drift", SCHEMA)
-    catalog.append("t.drift", spark.createDataFrame(ROWS, SCHEMA))
-    v1 = catalog.current_version("t.drift")
-    # Second drop: nulls spike in v, range widens in k, rows double.
-    junk = [(9, None, 0.5), (10, None, 9.5), (11, None, 2.0), (0, None, 1.0)]
-    catalog.append("t.drift", spark.createDataFrame(junk, SCHEMA))
-    d = catalog.profile_drift("t.drift", v1)
-    assert d["row_count"] == {"before": 4, "after": 8, "ratio": 2.0}
-    v = d["columns"]["v"]
-    assert v["null_rate"]["before"] == 0.25
-    assert v["null_rate"]["after"] == 0.625
-    assert v["null_rate"]["delta"] == 0.375
-    k = d["columns"]["k"]
-    # Numeric comparison: "10"/"11" above "3", "0" below "1" — widened
-    # on both ends (a lexicographic compare would miss the max side).
-    assert k["range_widened"] is True
-    assert (k["min"]["after"], k["max"]["after"]) == ("0", "11")
-    assert d["from_version"] == v1
-    assert d["to_version"] == catalog.current_version("t.drift")
-    # Profiling against head must not overwrite persisted stats.
-    assert catalog.stats("t.drift") is None
-
-
-def test_profile_drift_reports_schema_evolution(catalog, spark):
-    from pyspark.sql import types as TT
-
-    catalog.register("t.drift2", SCHEMA)
-    catalog.append("t.drift2", spark.createDataFrame(ROWS, SCHEMA))
-    v1 = catalog.current_version("t.drift2")
-    wide = TT.StructType(
-        SCHEMA.fields + [TT.StructField("extra", TT.IntegerType())]
-    )
-    catalog.append(
-        "t.drift2",
-        spark.createDataFrame([(5, "c", 0.1, 7)], wide),
-        merge_schema=True,
-    )
-    d = catalog.profile_drift("t.drift2", v1)
-    # Schema is table-level (Delta semantics): the v1 snapshot reads with
-    # the widened declared schema, so the new column is "common" with a
-    # 100% null rate before the widening append and lower after it.
-    extra = d["columns"]["extra"]
-    assert extra["status"] == "common"
-    assert extra["null_rate"]["before"] == 1.0
-    assert extra["null_rate"]["after"] < 1.0
-    assert d["columns"]["k"]["status"] == "common"
-
-
-def test_stats_informed_join_broadcasts_analyzed_small_side(catalog, spark):
-    from certified_dogs_and_cats_spark.plans import (
-        assert_broadcast_join,
-        plan_text,
-    )
-
-    dim_schema = T.StructType(
-        [T.StructField("k", T.IntegerType()), T.StructField("nm", T.StringType())]
-    )
-    fact_schema = T.StructType(
-        [T.StructField("k", T.IntegerType()), T.StructField("x", T.DoubleType())]
-    )
-    catalog.register("t.sij_dim", dim_schema)
-    catalog.register("t.sij_fact", fact_schema)
-    catalog.append(
-        "t.sij_dim", spark.createDataFrame([(1, "a"), (2, "b")], dim_schema)
-    )
-    catalog.append(
-        "t.sij_fact",
-        spark.createDataFrame([(i % 2 + 1, float(i)) for i in range(200)], fact_schema),
-    )
-    # No stats yet: neither side qualifies -> no broadcast hint from us.
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = catalog.stats_informed_join("t.sij_fact", "t.sij_dim", "k")
-        assert "BroadcastHashJoin" not in plan_text(j)
-        # ANALYZE both: the (small) dim side now broadcasts.
-        catalog.analyze("t.sij_dim")
-        catalog.analyze("t.sij_fact")
-        j = catalog.stats_informed_join("t.sij_fact", "t.sij_dim", "k")
-        assert_broadcast_join(j)
-        assert j.count() == 200
-        # A tiny threshold disqualifies everyone again.
-        j = catalog.stats_informed_join(
-            "t.sij_fact", "t.sij_dim", "k", broadcast_threshold_rows=1
-        )
-        assert "BroadcastHashJoin" not in plan_text(j)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

@@ -378,36 +378,6 @@ def test_optimize_where_compacts_only_selected_partitions(catalog, spark):
     assert _os.path.isdir(catalog.tables["t.ow"].path)
 
 
-# --- metadata-only COUNT(*) --------------------------------------------------
-
-
-def test_fast_count_matches_scan_count(catalog, spark):
-    _ranges(catalog, spark, "core.fc", [(0, 30), (30, 75)])
-    assert catalog.fast_count("core.fc") == 75
-    assert catalog.fast_count("core.fc") == catalog.table("core.fc").count()
-
-
-def test_fast_count_subtracts_deletion_vectors(catalog, spark):
-    _ranges(catalog, spark, "core.fcdv", [(0, 40)])
-    catalog.delete_where("core.fcdv", "k < 10")
-    assert catalog.fast_count("core.fcdv") == 30
-    # A second, stacked DV subtracts only its own rows.
-    catalog.delete_where("core.fcdv", "k >= 35")
-    assert catalog.fast_count("core.fcdv") == 25
-    assert catalog.table("core.fcdv").count() == 25
-
-
-def test_fast_count_empty_and_after_compact(catalog, spark):
-    from pyspark.sql import types as T
-
-    catalog.register("core.fce", SCHEMA)
-    assert catalog.fast_count("core.fce") == 0
-    _ranges(catalog, spark, "core.fcc", [(0, 20), (20, 50)])
-    catalog.delete_where("core.fcc", "k = 5")
-    catalog.compact("core.fcc")  # materializes the DV into rewritten files
-    assert catalog.fast_count("core.fcc") == 49
-
-
 def test_files_metadata_relation(catalog, spark):
     """files_metadata: one row per live file with footer rows/size and
     JSON column stats; per-file rows sum to the table count; an older

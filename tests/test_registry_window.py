@@ -1,67 +1,90 @@
-"""Driver-evidence budget guard: every query without a prior driver
-CORRECTNESS row — and every proven query whose IMPLEMENTATION changed
-since it was proven (stale fingerprint) — must sit inside the driver's
-50-row check window, or it can never (re-)earn evidence. Fails when
-additions overflow the budget — the fix is to retire a query or wait
-for the next round's proven-set update."""
+"""Registry and driver-evidence guards: every query carries an oracle,
+its fingerprint covers its implementation closure, and the committed
+QUERY_FINGERPRINTS.json stays in step with the driver artifacts and the
+tree. Registry order is registration order: importing the package
+registers queries and does nothing else."""
 
 from __future__ import annotations
 
+import ast
 import json
 import os
+import subprocess
+import sys
 
-from certified_dogs_and_cats_spark.queries import (
-    _DRIVER_PROVEN,
-    _STALE,
-    ORACLE,
-    QUERIES,
+from certified_dogs_and_cats_spark import queries as pkg
+from certified_dogs_and_cats_spark.queries import ORACLE, QUERIES
+from certified_dogs_and_cats_spark.queries.fingerprints import (
+    changed_since_recorded,
+    current_fingerprints,
+    driver_proven,
+    is_green,
 )
 
+# An external driver proves the first 50 registry rows a run; it sizes
+# the alarm in test_recorded_artifact_is_current_for_settled_queries.
 DRIVER_WINDOW = 50
 
 
-def _needs_evidence(name: str) -> bool:
-    return name not in _DRIVER_PROVEN or name in _STALE
+_IMPORT_PROBE = r"""
+import inspect, itertools, json, os, sys
+
+opened = []
+sys.addaudithook(
+    lambda event, args: event == "open" and opened.append(str(args[0]))
+)
+getsource_calls = []
+_getsource = inspect.getsource
 
 
-def test_unproven_queries_fill_driver_window():
-    """The window must never WASTE a slot: while any query needs
-    (re-)proving, every one of the 50 checked positions holds such a
-    query. More than 50 is allowed — the overflow is the
-    LAST-registered ones, which queue for the next round — but a
-    settled query sitting inside the window while a needy one waits
-    outside is a bug."""
-    names = list(QUERIES)
-    needy = [n for n in names if _needs_evidence(n)]
-    window = names[: min(DRIVER_WINDOW, len(needy))]
-    wasted = [n for n in window if not _needs_evidence(n)]
-    assert not wasted, f"settled queries occupying window slots: {wasted}"
-    overflow = needy[DRIVER_WINDOW:]
-    assert overflow == [
-        n for n in names[DRIVER_WINDOW:] if _needs_evidence(n)
-    ], "overflowed queries must be the last-registered ones"
+def _counting_getsource(obj):
+    getsource_calls.append(obj)
+    return _getsource(obj)
 
 
-def test_never_proven_queries_lead_the_window():
-    """VERDICT r12 #1: a query with ZERO driver rows anywhere must sit
-    ahead of every stale re-proof — registration order used to leave
-    last-registered never-proven queries behind ~66 re-proofs, outside
-    the 50-row window."""
-    from certified_dogs_and_cats_spark.queries import _PROOF_ROUNDS
+inspect.getsource = _counting_getsource  # fingerprinting's source reader
 
-    if not _PROOF_ROUNDS:
-        return  # fresh checkout: no artifacts, ordering is registration
-    names = list(QUERIES)
-    never_pos = [i for i, n in enumerate(names) if n not in _PROOF_ROUNDS]
-    stale_pos = [i for i, n in enumerate(names) if n in _STALE]
-    if never_pos and stale_pos:
-        assert max(never_pos) < min(stale_pos), (
-            "never-driver-proven queries must precede stale re-proofs"
-        )
-    # and every never-proven query is inside the driver window
-    assert all(i < DRIVER_WINDOW for i in never_pos[:DRIVER_WINDOW]), (
-        "never-proven queries pushed out of the 50-row window"
+from certified_dogs_and_cats_spark.queries import QUERIES
+
+print(json.dumps({
+    "artifacts": sorted({
+        p for p in opened
+        if os.path.basename(p).startswith(
+            ("CORRECTNESS_", "QUERY_FINGERPRINTS.json"))
+    }),
+    "getsource_calls": len(getsource_calls),
+    "modules": [m for m, _ in itertools.groupby(
+        fn.__module__ for fn in QUERIES.values())],
+}))
+"""
+
+
+def test_registry_import_only_registers_in_import_order():
+    """Importing the package reads no driver artifact, fingerprints
+    nothing, and leaves QUERIES in registration order: grouped by
+    defining module, in the order queries/__init__.py imports them."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = subprocess.run(
+        [sys.executable, "-c", _IMPORT_PROBE],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        check=True,
     )
+    seen = json.loads(probe.stdout.splitlines()[-1])
+    assert seen["artifacts"] == [], "import opened driver artifacts"
+    assert seen["getsource_calls"] == 0, "import fingerprinted queries"
+    with open(pkg.__file__) as fh:
+        tree = ast.parse(fh.read())
+    import_order = [
+        f"{pkg.__name__}.{alias.name}"
+        for node in tree.body
+        if isinstance(node, ast.ImportFrom) and node.level == 1 and not node.module
+        for alias in node.names
+    ]
+    modules = seen["modules"]
+    assert len(modules) == len(set(modules)), f"modules interleaved: {modules}"
+    assert modules == [m for m in import_order if m in modules]
 
 
 def test_every_query_has_oracle_and_unique_name():
@@ -133,13 +156,8 @@ def test_fingerprint_covers_same_module_helpers():
 
 
 def test_stale_fingerprint_reenters_window():
-    """The rotation front = unproven + stale-proven: a proven query
-    recorded with a mismatching fingerprint must be ordered before
-    settled proven queries."""
-    from certified_dogs_and_cats_spark.queries.fingerprints import (
-        changed_since_recorded,
-    )
-
+    """A proven query recorded with a mismatching (or empty) fingerprint
+    counts as changed, so it needs proving again."""
     current = {"a": "fp_a", "b": "fp_b", "c": "fp_c"}
     recorded = {"a": "fp_a", "b": "OLD", "c": ""}
     assert changed_since_recorded(
@@ -164,8 +182,6 @@ def test_fingerprint_artifact_covers_registry_and_latest_greens():
        stamp means `record_fingerprints.py --sync` was skipped.
     """
     import glob
-    import json
-    import os
 
     from certified_dogs_and_cats_spark.queries.fingerprints import (
         recorded_fingerprints,
@@ -188,12 +204,7 @@ def test_fingerprint_artifact_covers_registry_and_latest_greens():
     greens = [
         n
         for n, row in latest.items()
-        if n in QUERIES
-        and isinstance(row, dict)
-        and row.get("rows_match")
-        and row.get("schema_match")
-        and row.get("hash_match", True)
-        and row.get("err") in (None, "")
+        if n in QUERIES and is_green(row)
     ]
     unstamped = sorted(n for n in greens if not recorded.get(n))
     assert not unstamped, (
@@ -205,10 +216,13 @@ def test_fingerprint_artifact_covers_registry_and_latest_greens():
 def test_recorded_artifact_is_current_for_settled_queries():
     """QUERY_FINGERPRINTS.json must stay in sync with the tree: every
     driver-proven query not deliberately re-entered this round matches
-    its recorded fingerprint (i.e. _STALE is an intentional, small set
-    — a huge stale set means someone forgot to run
+    its recorded fingerprint (i.e. the stale set is an intentional,
+    small set — a huge stale set means someone forgot to run
     scripts/record_fingerprints.py after changing implementations)."""
-    assert _STALE <= _DRIVER_PROVEN
+    now_fps = current_fingerprints()
+    proven = driver_proven()
+    stale = changed_since_recorded(proven, current=now_fps)
+    assert stale <= proven
     # Mid-round, heavy extension edits legitimately invalidate many
     # consumers at once; the binding constraint is the WINDOW — needy
     # (unproven + stale) entries beyond it queue for the next round and
@@ -216,7 +230,7 @@ def test_recorded_artifact_is_current_for_settled_queries():
     # larger than the whole window therefore still works, but signals
     # the re-record step was skipped for multiple rounds.
     needy = [
-        n for n in QUERIES if n not in _DRIVER_PROVEN or n in _STALE
+        n for n in QUERIES if n not in proven or n in stale
     ]
     if len(needy) <= DRIVER_WINDOW + 10:
         return
@@ -239,28 +253,13 @@ def test_recorded_artifact_is_current_for_settled_queries():
     except (OSError, ValueError):
         pass
     gate_fps = local.pop("_fingerprints", {})
-    from certified_dogs_and_cats_spark.queries.fingerprints import (
-        current_fingerprints,
-    )
-
-    now_fps = current_fingerprints()
-
-    def _green(row: object) -> bool:
-        return (
-            isinstance(row, dict)
-            and bool(row.get("rows_match"))
-            and bool(row.get("schema_match"))
-            and bool(row.get("hash_match", True))
-            and row.get("err") in (None, "")
-        )
-
     full_local_gate = set(QUERIES) <= set(local)
     unaccounted = [
         n
         for n in needy
         if not (
             full_local_gate
-            and _green(local.get(n))
+            and is_green(local.get(n))
             and gate_fps.get(n) == now_fps.get(n)
         )
     ]
