@@ -180,6 +180,15 @@ def one_partition_if_small(df: DataFrame, nbytes: int) -> DataFrame:
     return df.coalesce(1)
 
 
+def _one_partition(df: DataFrame) -> bool:
+    """True when ``df``'s physical plan reports exactly one output
+    partition (a ``coalesce(1)`` read and the joins, windows and
+    projections that keep its partitioning). It plans ``df`` without
+    running it; a file scan reports an unknown count and reads False."""
+    qe = df._jdf.queryExecution()
+    return qe.sparkPlan().outputPartitioning().numPartitions() == 1
+
+
 class ConstraintViolation(ValueError):
     """A write would insert rows violating a CHECK constraint."""
 
@@ -644,7 +653,7 @@ class Catalog:
             shutil.rmtree(out, ignore_errors=True)
             return 0
         try:
-            added = self._stage_files_in(spec, updated)
+            added, _ = self._stage_files_in(spec, updated)
         except Exception:
             # A constraint violation (or any failed write): the sidecar
             # was never committed.
@@ -705,7 +714,7 @@ class Catalog:
                 " do not satisfy the predicate"
             )
         if not self.exists(name):
-            added = self._stage_files_in(spec, df)
+            added, _ = self._stage_files_in(spec, df)
             self._commit(name, "replace_where", added=added)
             return 0
         self._require_uniform_layout(spec)
@@ -714,7 +723,7 @@ class Catalog:
         prior = manifest[-1].get("dv", []) if manifest else []
         cur = self._live_scan(spec, manifest)
         if cur is None:
-            added = self._stage_files_in(spec, df)
+            added, _ = self._stage_files_in(spec, df)
             self._commit(name, "replace_where", added=added)
             return 0
         root = os.path.abspath(spec.path)
@@ -740,7 +749,7 @@ class Catalog:
         if n == 0:
             shutil.rmtree(out, ignore_errors=True)
         try:
-            added = self._stage_files_in(spec, df)
+            added, _ = self._stage_files_in(spec, df)
         except Exception:
             shutil.rmtree(out, ignore_errors=True)
             raise
@@ -1302,10 +1311,7 @@ class Catalog:
         reader = self.spark.read.format(fmt).schema(spec.schema)
         for k, v in options.items():
             reader = reader.option(k, v)
-        df = load_paths(reader, new)
-        n_rows = df.count()
-        self.append(name, df)
-        return (len(new), n_rows)
+        return (len(new), self.append(name, load_paths(reader, new)))
 
     def add_constraint(self, name: str, cname: str, expr: str) -> None:
         """CHECK constraint (Delta ``ALTER TABLE .. ADD CONSTRAINT .. CHECK``
@@ -1371,14 +1377,17 @@ class Catalog:
         df: DataFrame,
         txn: dict | None = None,
         merge_schema: bool = False,
-    ) -> None:
-        """Blind append. The write is staged to a writer-private directory
-        and the files are then moved in, so the commit records EXACTLY the
-        files this writer produced — attribution never depends on what
-        racing writers have in flight in the shared directory. Spark's
-        UUID-bearing part filenames make cross-writer name collisions
-        impossible, and the commit itself rebases+retries on conflict
-        (see :meth:`_commit`), so concurrent appends all land.
+    ) -> int:
+        """Blind append; returns the number of rows appended. The write
+        is staged to a writer-private directory and the files are then
+        moved in, so the commit records EXACTLY the files this writer
+        produced — attribution never depends on what racing writers have
+        in flight in the shared directory. Spark's UUID-bearing part
+        filenames make cross-writer name collisions impossible, and the
+        commit itself rebases+retries on conflict (see :meth:`_commit`),
+        so concurrent appends all land. The count is read from the staged
+        files (see :meth:`_stage_files_in`), so it costs no Spark job, and
+        a write of 0 rows commits nothing: no version, no ``txn`` marker.
 
         ``merge_schema=True`` (Delta ``mergeSchema`` parity) widens the
         declared schema with any NEW columns the incoming frame carries
@@ -1419,7 +1428,9 @@ class Catalog:
         df = self._apply_defaults(spec, df)
         df = self._apply_identity(spec, df)
         df = self._apply_generated(spec, df)
-        added = self._stage_files_in(spec, df)
+        added, rows = self._stage_files_in(spec, df)
+        if not rows:
+            return 0
         self._commit(name, "append", txn=txn, added=added)
         self._maintain_blooms(name, added)
         if (
@@ -1432,6 +1443,7 @@ class Catalog:
                 self.maybe_compact(name)
             except ConcurrentWriteConflict:
                 pass
+        return rows
 
     # Identity block size: ids within one write are base + partition_id *
     # 2^33 + row_index_in_partition (monotonically_increasing_id's layout),
@@ -1590,11 +1602,13 @@ class Catalog:
         ``overwrite_partitions`` write through here. ``rebalance`` hints a
         partitioned write to be rebalanced on its partition columns
         (Spark's optimized write: AQE merges small shuffle partitions and
-        splits skewed ones); the two overwrites leave it off, since
-        compaction's file count and sort order must survive."""
+        splits skewed ones) unless ``df`` is one partition already, whose
+        one task writes one file per partition value without that
+        exchange; the two overwrites leave it off, since compaction's
+        file count and sort order must survive."""
         checks = self._with_not_null(spec.name, df, spec.constraints)
         out = self._to_physical(spec, _enforced(spec, df, checks))
-        if rebalance and spec.partition_by:
+        if rebalance and spec.partition_by and not _one_partition(df):
             out = out.hint("rebalance", *spec.partition_by)
         writer = out.write.format(spec.fmt).mode("overwrite")
         if spec.partition_by:
@@ -1609,26 +1623,53 @@ class Catalog:
             self._check_constraints(spec.name, df, spec.constraints)
             raise
 
-    def _stage_files_in(self, spec: TableSpec, df: DataFrame) -> list[str]:
+    def _stage_files_in(
+        self, spec: TableSpec, df: DataFrame
+    ) -> tuple[list[str], int]:
         """Write ``df`` (constraint-checked, see :meth:`_write_checked`) to
         a writer-private staging directory and move the data files into the
         table; returns exactly the relative files this writer added
         (Spark's UUID-bearing part filenames make cross-writer collisions
-        impossible). The write is rebalanced on the partition columns, so
-        a small append lands as one file per partition value instead of
-        one per input split."""
+        impossible) and the rows they hold. A write of 0 rows adds no file.
+        The write is rebalanced on the partition columns, so a small
+        append lands as one file per partition value instead of one per
+        input split."""
         staging = f"{spec.path}__append_{os.getpid()}_{time.time_ns()}"
         try:
             self._write_checked(spec, df, staging, rebalance=True)
+            staged = self._data_files(staging)
+            rows = self._staged_rows(spec, staging, staged)
             added = []
-            for rel in self._data_files(staging):
+            for rel in staged if rows else ():
                 dst = os.path.join(spec.path, rel)
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 os.replace(os.path.join(staging, rel), dst)
                 added.append(rel)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        return added
+        return added, rows
+
+    def _staged_rows(
+        self, spec: TableSpec, staging: str, files: list[str]
+    ) -> int:
+        """Rows in the ``files`` just written under ``staging``: the sum
+        of their parquet footers' row counts, which reads no data and
+        starts no Spark job; other formats are counted by Spark."""
+        if spec.fmt == "parquet":
+            import pyarrow.parquet as pq
+
+            return sum(
+                pq.read_metadata(os.path.join(staging, rel)).num_rows
+                for rel in files
+            )
+        if not files:
+            return 0
+        return (
+            self.spark.read.format(spec.fmt)
+            .schema(spec.physical_schema())
+            .load(staging)
+            .count()
+        )
 
     def history(self, name: str) -> list[dict]:
         """DESCRIBE HISTORY analog with operation metrics (Delta's
@@ -3451,28 +3492,21 @@ class Catalog:
         )
         return kept, len(files)
 
-    def _stats_path(self, name: str) -> str:
-        return os.path.join(self._meta_dir(name), "stats.json")
-
     def analyze(self, name: str, version: int | None = None) -> dict:
         """ANALYZE TABLE ... COMPUTE STATISTICS FOR ALL COLUMNS parity:
         one aggregation pass computes row count plus per-column null
         count, HLL-approximate distinct count, and min/max for orderable
-        atomic types; results persist to ``_meta/<table>/stats.json``
-        beside the version manifest.
+        atomic types, returned with the version they describe.
 
         These are the numbers a planner spends: row count and ndv drive
         join-side broadcast decisions and shuffle-partition sizing;
         min/max give partition-elimination bounds. One pass, one shuffle
         (a single global aggregate), never one job per column.
 
-        ``version`` analyzes a time-travel snapshot instead of the head;
-        snapshot stats are returned but NOT persisted (stats.json always
-        describes a head analysis, so staleness stays well-defined).
+        ``version`` analyzes a time-travel snapshot instead of the head.
         """
         from pyspark.sql import functions as F
 
-        spec = self.tables[name]
         df = self.table(name, version=version)
         aggs = [F.count(F.lit(1)).alias("__rows")]
         cols = []
@@ -3509,21 +3543,7 @@ class Catalog:
                 for c in cols
             },
         }
-        if version is None:
-            os.makedirs(self._meta_dir(name), exist_ok=True)
-            with open(self._stats_path(name), "w") as fh:
-                json.dump(stats, fh, indent=1)
         return stats
-
-    def stats(self, name: str) -> dict | None:
-        """Stored statistics from the last :meth:`analyze`, or None. The
-        ``version`` field tells the caller how stale they are relative to
-        :meth:`current_version`."""
-        p = self._stats_path(name)
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return json.load(fh)
 
 
 @dataclass

@@ -1,21 +1,98 @@
 """Expectation/guard layer (reference batch guards, SURVEY.md §2.11).
 
-The reference runs each guard as a separate action, re-executing the scan
-per guard (notebooks/bronze.py:98-107 — flagged as an inefficiency in
-SURVEY.md §4). Here every guard over the same frame is folded into ONE
-aggregate pass: at 100 TB that's one scan instead of four.
+The reference runs each guard as a separate action before its append
+(notebooks/bronze.py:98-107, flagged as an inefficiency in SURVEY.md §4).
+Here the guards cost no action of their own: :func:`append_new_rows` puts
+them in a ``raise_error`` column of the batch, so the write of the new rows
+checks every batch row, and only a failed write runs the counting
+:func:`run_guards` to name what failed.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..operators.joins import idempotent_new_rows
+
+if TYPE_CHECKING:
+    from .catalog import Catalog
 
 
 class GuardError(AssertionError):
     """A batch failed a data-quality guard; the run must abort."""
+
+
+#: Message of the ``raise_error`` that :func:`_guarded` plants in a batch.
+_GUARD_VIOLATION = "__guard_violation__"
+
+
+def _outside(c: str, allowed: Sequence[str]):
+    """True where column ``c`` is NULL or not among ``allowed``."""
+    return ~F.coalesce(F.col(c).isin(*allowed), F.lit(False))
+
+
+def _guarded(
+    df: DataFrame,
+    key: str,
+    *,
+    no_nulls: Sequence[str] = (),
+    unique: Sequence[str] = (),
+    domain: dict[str, Sequence[str]] | None = None,
+) -> DataFrame:
+    """``df`` with column ``key`` replaced by one that raises
+    :data:`_GUARD_VIOLATION` on any row failing a guard (the guards of
+    :func:`run_guards`; uniqueness is a window count, which plans no
+    exchange over a one-partition batch). A join on ``key`` above it
+    cannot skip the check: the key it joins on is the checked column, so
+    rows the join drops are checked too, and the optimizer cannot push
+    the join below the window the check reads."""
+    bad = F.lit(False)
+    for c in no_nulls:
+        bad = bad | F.col(c).isNull()
+    for c in unique:
+        # As in run_guards, a NULL in a unique column fails it.
+        n = F.count(F.lit(1)).over(Window.partitionBy(c))
+        bad = bad | F.col(c).isNull() | (n > 1)
+    for c, allowed in (domain or {}).items():
+        bad = bad | _outside(c, allowed)
+    return df.withColumn(
+        key,
+        F.when(bad, F.raise_error(F.lit(_GUARD_VIOLATION))).otherwise(
+            F.col(key)
+        ),
+    )
+
+
+def append_new_rows(
+    catalog: "Catalog",
+    name: str,
+    batch: DataFrame,
+    key: str,
+    **guards,
+) -> int:
+    """Append the rows of ``batch`` whose ``key`` table ``name`` does not
+    hold yet (the reference's exactly-once anti-join), in the one job
+    that also checks ``guards`` over every row of ``batch``, and return
+    how many were appended (0 commits nothing, see
+    :meth:`Catalog.append`). A guard failure fails the write, and then
+    :func:`run_guards` raises the :class:`GuardError` that names it."""
+    existing = catalog.table(name)
+    new_rows = idempotent_new_rows(
+        _guarded(batch, key, **guards), existing, [key]
+    )
+    try:
+        return catalog.append(name, new_rows)
+    except Exception as e:
+        # Matched on the text, not the exception type: the marker
+        # survives however the JVM error reaches Python.
+        if _GUARD_VIOLATION not in str(e):
+            raise
+        run_guards(batch, **guards)
+        raise
 
 
 def run_guards(
@@ -24,50 +101,35 @@ def run_guards(
     no_nulls: Sequence[str] = (),
     unique: Sequence[str] = (),
     domain: dict[str, Sequence[str]] | None = None,
-    counts: dict[str, DataFrame] | None = None,
-) -> dict[str, int]:
-    """Single-pass guard evaluation.
+) -> None:
+    """Single-pass guard evaluation; raises :class:`GuardError` naming
+    every guard that fails, with counts.
 
     - no_nulls: columns that must not contain NULL (bronze.py:98-100)
     - unique:   columns whose values must be unique  (bronze.py:102-103)
     - domain:   column -> allowed values whitelist   (bronze.py:105-107)
-    - counts:   name -> frame whose row count the caller also needs,
-      returned by name
 
-    The counted frames are stacked under ``df`` by a tagged union and every
-    figure is one conditional aggregate over the stack, so a stage's
-    guards and counts cost one action and one aggregation (two exchanges
-    for the distinct count), not one aggregation per frame.
+    Every guard is one aggregate over ``df``, so all of them cost one
+    action (two exchanges for the distinct count), not one per guard.
     """
     domain = domain or {}
-    counts = counts or {}
-    tag = F.col("__part__")
-    guarded = sorted({*no_nulls, *unique, *domain})
-    stack = df.select(*guarded, F.lit(0).alias("__part__"))
-    for i, frame in enumerate(counts.values(), 1):
-        stack = stack.unionByName(
-            frame.select(F.lit(i).alias("__part__")), allowMissingColumns=True
-        )
-
-    def rows_where(cond):
-        return F.sum(F.when((tag == 0) & cond, 1).otherwise(0))
-
-    aggs = [rows_where(F.lit(True)).alias("__n__")]
+    aggs = [F.count(F.lit(1)).alias("__n__")]
     for c in no_nulls:
-        aggs.append(rows_where(F.col(c).isNull()).alias(f"__null__{c}"))
-    for c in unique:
         aggs.append(
-            F.countDistinct(F.when(tag == 0, F.col(c))).alias(f"__dist__{c}")
+            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(
+                f"__null__{c}"
+            )
         )
+    for c in unique:
+        aggs.append(F.countDistinct(F.col(c)).alias(f"__dist__{c}"))
     for c, allowed in domain.items():
-        bad = (~F.col(c).isin(*allowed)) | F.col(c).isNull()
-        aggs.append(rows_where(bad).alias(f"__bad__{c}"))
-    for i, key in enumerate(counts, 1):
         aggs.append(
-            F.sum(F.when(tag == i, 1).otherwise(0)).alias(f"__count__{key}")
+            F.sum(F.when(_outside(c, allowed), 1).otherwise(0)).alias(
+                f"__bad__{c}"
+            )
         )
     # A SUM over no rows is NULL; here that means 0.
-    row = {k: v or 0 for k, v in stack.agg(*aggs).collect()[0].asDict().items()}
+    row = {k: v or 0 for k, v in df.agg(*aggs).collect()[0].asDict().items()}
     n = row["__n__"]
     problems = []
     for c in no_nulls:
@@ -89,7 +151,6 @@ def run_guards(
             )
     if problems:
         raise GuardError("; ".join(problems))
-    return {key: row[f"__count__{key}"] for key in counts}
 
 
 def assert_flag_consistency(

@@ -8,10 +8,12 @@ Semantics parity with notebooks/bronze.py (SURVEY.md §3.1 step 2):
 - exactly-once rows via _id anti-join against existing Bronze
 - append partitioned by (Year, ANIMAL_TYPE)
 
-Differences by design (documented in SURVEY.md §4): guards run in ONE
-aggregate pass over a cached batch instead of re-scanning per guard, in the
-same action that counts the new rows; the fixed `clock` parameter replaces
-wall-clock timestamps so runs are reproducible and oracle-comparable.
+Differences by design (documented in SURVEY.md §4): the guards run inside
+the write of the new rows, as a ``raise_error`` column over the whole batch
+(:func:`expectations.append_new_rows`), so a clean date checks them at no
+cost of its own, and the new-row count comes from the written files'
+footers; the fixed `clock` parameter replaces wall-clock timestamps so runs
+are reproducible and oracle-comparable.
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import pattern_valid
 from .catalog import Catalog, one_partition_if_small
-from .expectations import is_empty, run_guards
+from .expectations import append_new_rows, is_empty
 from .schemas import (
     ANIMAL_TYPES,
     BRONZE_SCHEMA,
@@ -113,53 +115,33 @@ def bronze_stage(
         .csv(drop_dir),
         sum(os.path.getsize(p) for p in csvs),
     )
-    batch = standardize(raw, ingestion_date, clock).cache()
-    try:
-        from ..operators.joins import idempotent_new_rows
-
-        existing = catalog.table("core.licensed_pets_bronze")
-        new_rows = idempotent_new_rows(batch, existing, ["_id"]).cache()
-
-        def _mark_loaded() -> None:
-            # An inline table, not createDataFrame: a frame of local
-            # Python rows runs its tasks in Python workers, which cost
-            # about 1 CPU-s a date (4 vCPU) for this one row, and values
-            # bound as parameters keep the plan (and its generated code)
-            # the same from date to date.
-            ctrl_row = spark.sql(
-                "SELECT * FROM VALUES (:dataset, CAST(:day AS DATE),"
-                " CAST(:clock AS TIMESTAMP))"
-                " AS t(dataset, ingestion_date, loaded_ts)",
-                args={
-                    "dataset": DATASET, "day": ingestion_date, "clock": clock
-                },
-            )
-            catalog.append("core.load_control", ctrl_row)
-
-        try:
-            # One action: the guards over the batch, and the count of its
-            # new rows (which also fills new_rows' cache for the append).
-            n = run_guards(
-                batch,
-                no_nulls=["_id"],
-                unique=["_id"],
-                domain={"ANIMAL_TYPE": ANIMAL_TYPES},
-                counts={"new": new_rows},
-            )["new"]
-            if n == 0:
-                # DELIBERATELY not marked in load_control: a drop whose
-                # rows all duplicate earlier dates contributed nothing,
-                # and leaving the date unmarked lets a CORRECTED re-drop
-                # for it still load later (pinned by test_bronze). The
-                # trade: a crash between the data append and the control
-                # write re-reads this drop on every future run for this
-                # date — harmless (the anti-join inserts 0) but paid in
-                # scan cost until a corrected drop or manual mark lands.
-                return StageResult("skipped_no_new_rows")
-            catalog.append("core.licensed_pets_bronze", new_rows)
-        finally:
-            new_rows.unpersist()
-        _mark_loaded()
-        return StageResult("loaded", rows=n)
-    finally:
-        batch.unpersist()
+    n = append_new_rows(
+        catalog,
+        "core.licensed_pets_bronze",
+        standardize(raw, ingestion_date, clock),
+        "_id",
+        no_nulls=["_id"],
+        unique=["_id"],
+        domain={"ANIMAL_TYPE": ANIMAL_TYPES},
+    )
+    if n == 0:
+        # DELIBERATELY not marked in load_control: a drop whose rows all
+        # duplicate earlier dates contributed nothing, and leaving the
+        # date unmarked lets a CORRECTED re-drop for it still load later
+        # (pinned by test_bronze). The trade: a crash between the data
+        # append and the control write re-reads this drop on every future
+        # run for this date — harmless (the anti-join inserts 0) but paid
+        # in scan cost until a corrected drop or manual mark lands.
+        return StageResult("skipped_no_new_rows")
+    # An inline table, not createDataFrame: a frame of local Python rows
+    # runs its tasks in Python workers, which cost about 1 CPU-s a date
+    # (4 vCPU) for this one row, and values bound as parameters keep the
+    # plan (and its generated code) the same from date to date.
+    ctrl_row = spark.sql(
+        "SELECT * FROM VALUES (:dataset, CAST(:day AS DATE),"
+        " CAST(:clock AS TIMESTAMP))"
+        " AS t(dataset, ingestion_date, loaded_ts)",
+        args={"dataset": DATASET, "day": ingestion_date, "clock": clock},
+    )
+    catalog.append("core.load_control", ctrl_row)
+    return StageResult("loaded", rows=n)

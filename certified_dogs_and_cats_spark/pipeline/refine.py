@@ -13,7 +13,11 @@ Semantics parity with notebooks/silver.py (SURVEY.md §3.1 step 3):
   join hit, never fallback equality (docs/runbook.md:113); unmapped rows
   fall back to breed_raw
 - filter rows with required fields; latest-wins window dedup on _id
-- guards, anti-join vs existing Silver, partitioned append
+- guards, anti-join vs existing Silver and partitioned append in one
+  write: a guard failure fails the write itself
+  (expectations.append_new_rows), and the date's Bronze slice is probed
+  only when no row is new, to tell ``skipped_no_files`` from
+  ``skipped_no_new_rows``
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ from ..functions.scalar import normalize_key, null_if_invalid, pattern_valid
 from ..operators.joins import dim_lookup
 from ..operators.windows import latest_per_key
 from .catalog import Catalog
-from .expectations import run_guards
+from .expectations import append_new_rows, is_empty
 from .ingest import StageResult
 from .refdata import ensure_mapping
 from .schemas import ANIMAL_TYPES, FSA_PATTERN, SILVER_SCHEMA
@@ -106,29 +110,16 @@ def silver_stage(
         "processed_ts", F.lit(clock).cast("timestamp")
     ).select(*[f.name for f in SILVER_SCHEMA.fields])
 
-    silver_batch = silver_batch.cache()
-    try:
-        from ..operators.joins import idempotent_new_rows
-
-        existing = catalog.table("core.licensed_pets_silver")
-        new_rows = idempotent_new_rows(silver_batch, existing, ["_id"]).cache()
-        try:
-            # One action: the guards, the size of the date's Bronze slice
-            # and the count of new rows.
-            got = run_guards(
-                silver_batch,
-                no_nulls=["_id"],
-                unique=["_id"],
-                counts={"bronze": bronze, "new": new_rows},
-            )
-            if got["bronze"] == 0:
-                return StageResult("skipped_no_files")
-            n = got["new"]
-            if n == 0:
-                return StageResult("skipped_no_new_rows")
-            catalog.append("core.licensed_pets_silver", new_rows)
-            return StageResult("loaded", rows=n)
-        finally:
-            new_rows.unpersist()
-    finally:
-        silver_batch.unpersist()
+    n = append_new_rows(
+        catalog,
+        "core.licensed_pets_silver",
+        silver_batch,
+        "_id",
+        no_nulls=["_id"],
+        unique=["_id"],
+    )
+    if n:
+        return StageResult("loaded", rows=n)
+    if is_empty(bronze):
+        return StageResult("skipped_no_files")
+    return StageResult("skipped_no_new_rows")

@@ -41,6 +41,17 @@ def raw_root(tmp_path):
     return str(tmp_path / "raw" / "licensed_pets")
 
 
+def jobs_in(spark, group: str, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def write_drop(raw_root: str, d: date, rows: list[tuple]) -> str:
     """Write one raw CSV drop at raw_root/ingestion_date=D/data.csv."""
     drop = os.path.join(raw_root, f"ingestion_date={d.isoformat()}")

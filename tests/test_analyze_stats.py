@@ -1,5 +1,5 @@
-"""ANALYZE TABLE statistics: single-pass column stats persisted beside
-the version manifest — the numbers broadcast/shuffle planning spends."""
+"""ANALYZE TABLE statistics: single-pass column stats, the numbers
+broadcast/shuffle planning spends."""
 
 from __future__ import annotations
 
@@ -31,25 +31,7 @@ def test_analyze_computes_and_persists_stats(catalog, spark):
     assert (s["columns"]["k"]["min"], s["columns"]["k"]["max"]) == ("1", "3")
     assert s["columns"]["v"]["null_count"] == 1
     assert s["columns"]["x"]["min"] == "1.5"
-    # Persisted and re-readable without recomputation.
-    assert catalog.stats("t.stats") == s
     assert s["version"] == catalog.current_version("t.stats")
-
-
-def test_stats_staleness_is_detectable(catalog, spark):
-    catalog.register("t.stale", SCHEMA)
-    catalog.append("t.stale", spark.createDataFrame(ROWS, SCHEMA))
-    catalog.analyze("t.stale")
-    catalog.append("t.stale", spark.createDataFrame(ROWS, SCHEMA))
-    stored = catalog.stats("t.stale")
-    assert stored["version"] < catalog.current_version("t.stale")
-    # Re-analyze catches up.
-    assert catalog.analyze("t.stale")["row_count"] == 8
-
-
-def test_stats_missing_is_none(catalog):
-    catalog.register("t.nostats", SCHEMA)
-    assert catalog.stats("t.nostats") is None
 
 
 def test_sql_front_door_analyze(catalog, spark):
@@ -64,15 +46,4 @@ def test_sql_front_door_analyze(catalog, spark):
     )[0]
     rows = {r.column: r for r in out.collect()}
     assert rows["k"].row_count == 4 and rows["k"].approx_ndv == 3
-    assert catalog.stats("core.t_an")["row_count"] == 4
 
-
-def test_analyze_snapshot_version_does_not_persist(catalog, spark):
-    catalog.register("t.snapan", SCHEMA)
-    catalog.append("t.snapan", spark.createDataFrame(ROWS, SCHEMA))
-    v1 = catalog.current_version("t.snapan")
-    catalog.append("t.snapan", spark.createDataFrame(ROWS, SCHEMA))
-    s = catalog.analyze("t.snapan", version=v1)
-    assert s["row_count"] == 4 and s["version"] == v1
-    # Snapshot analysis leaves the persisted head stats untouched.
-    assert catalog.stats("t.snapan") is None

@@ -13,6 +13,8 @@ from pyspark.sql import types as T
 
 from certified_dogs_and_cats_spark.pipeline.catalog import ConstraintViolation
 
+from conftest import jobs_in
+
 SCHEMA = T.StructType(
     [
         T.StructField("k", T.LongType(), False),
@@ -32,16 +34,6 @@ def _data_files(path: str) -> list[str]:
     ]
 
 
-def _jobs_in(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_read_of_many_committed_files_starts_no_job(spark, catalog):
     """More than 32 committed files (Spark's default listing threshold)
     are read from the commit log's list without a file-listing job."""
@@ -52,7 +44,7 @@ def test_read_of_many_committed_files_starts_no_job(spark, catalog):
     catalog.append("t.wide", rows)
     assert len(_data_files(catalog.tables["t.wide"].path)) > 32
 
-    df, jobs = _jobs_in(spark, "read-wide", lambda: catalog.table("t.wide"))
+    df, jobs = jobs_in(spark, "read-wide", lambda: catalog.table("t.wide"))
     assert jobs == 0
     assert df.count() == 400
 
@@ -114,7 +106,7 @@ def test_clean_append_to_checked_table_is_one_job(spark, catalog):
     catalog.register("t.ok", SCHEMA)
     catalog.add_constraint("t.ok", "positive", "v > 0")
     rows = spark.createDataFrame([(1, 5, "a"), (2, 6, "b")], SCHEMA)
-    _, jobs = _jobs_in(spark, "clean-append", lambda: catalog.append("t.ok", rows))
+    _, jobs = jobs_in(spark, "clean-append", lambda: catalog.append("t.ok", rows))
     assert jobs == 1
     assert sorted(r.k for r in catalog.table("t.ok").collect()) == [1, 2]
 

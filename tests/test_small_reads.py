@@ -17,7 +17,7 @@ from certified_dogs_and_cats_spark.pipeline import DdlSession, build_daily_pipel
 # The dashboard's parameterised reads: one FSA's top breeds, one breed's stats.
 from perfbench.etl import BREED_QUERY, FSA_QUERY
 
-from conftest import CLOCK1, CLOCK2, D1, D2, DROP1, DROP2, write_drop
+from conftest import CLOCK1, CLOCK2, D1, D2, DROP1, DROP2, jobs_in, write_drop
 
 D3 = date(2026, 1, 3)
 CLOCK3 = datetime(2026, 1, 3, 10, 0, 0)
@@ -33,16 +33,6 @@ SCHEMA = T.StructType(
         T.StructField("v", T.StringType(), True),
     ]
 )
-
-
-def _jobs_in(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _plan(df) -> str:
@@ -73,7 +63,7 @@ def test_every_dashboard_read_runs_one_job(spark, catalog, raw_root):
     views = sorted(build_views(catalog))
     assert len(views) == 10
     for v in views:
-        rows, jobs = _jobs_in(
+        rows, jobs = jobs_in(
             spark, f"read-{v}", spark.table(f"pets_gold_{v}").collect)
         assert rows, v
         assert jobs == 1, (v, jobs)
@@ -82,7 +72,7 @@ def test_every_dashboard_read_runs_one_job(spark, catalog, raw_root):
         (BREED_QUERY, {"b": "POODLE"}),
     ]
     for query, args in reads:
-        rows, jobs = _jobs_in(
+        rows, jobs = jobs_in(
             spark, f"param-{args}", spark.sql(query, args=args).collect)
         assert rows, args
         assert jobs == 1, (args, jobs)
